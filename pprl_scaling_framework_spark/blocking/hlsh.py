@@ -29,6 +29,7 @@ from pyspark.sql.types import ArrayType, LongType
 
 from ..core.bloom import unpack_bits
 from ..core.javarandom import shuffled_range_prefix
+from ..sources.session import evict_zip_finders
 
 MAX_KEY_BITS = 62
 
@@ -56,6 +57,7 @@ def hlsh_keys_udf(positions: np.ndarray, n_bits: int):
 
     @F.pandas_udf(ArrayType(LongType()))
     def _keys(bf: pd.Series) -> pd.Series:
+        evict_zip_finders()
         nb = (n_bits + 7) // 8
         packed = np.frombuffer(b"".join(bf.tolist()), dtype=np.uint8).reshape(len(bf), nb)
         sel = (packed[:, byte_idx] >> shifts) & 1          # (B, L*K) uint8

@@ -103,7 +103,9 @@ def connected_components(
     alternating-star loop costs a fixed ~10 driver-coordinated rounds, which
     dominates wall time for small graphs); larger graphs run the
     O(log n)-round large-star/small-star loop. Pass ``driver_threshold=0``
-    to force the distributed path.
+    to force the distributed path. If that loop has not converged after
+    ``max_iterations`` rounds it raises ``RuntimeError`` instead of
+    returning a partial labelling.
     """
     edges = _canon(
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -173,6 +175,12 @@ def connected_components(
             edges = edges2
             break
         edges = edges2
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iterations="
+            f"{max_iterations} large-star/small-star rounds; raise "
+            "max_iterations"
+        )
 
     roots = edges.groupBy("src").agg(F.min("dst").alias("entity_id")).select(
         F.col("src").alias("uid"), "entity_id"

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
+from ..sources.session import evict_zip_finders
 from .batch_kernel import BatchEncoder
 from .schemes import EncodingConfig
 
@@ -22,13 +23,15 @@ def encode_udf(config: EncodingConfig):
     """Vectorized pandas UDF ``(field cols...) -> binary`` for one config.
 
     The BatchEncoder (and its per-unique-q-gram HMAC memo) lives once per
-    python worker process and is reused across Arrow batches.
+    task and is reused across that task's Arrow batches: ``holder`` is
+    unpickled afresh with every task, even on a reused worker process.
     """
     cfg_json = config.to_json()
     holder: dict = {}
 
     @F.pandas_udf(BinaryType())
     def _encode(*cols):
+        evict_zip_finders()
         enc = holder.get("enc")
         if enc is None:
             enc = BatchEncoder(EncodingConfig.from_json(cfg_json))

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from ..ops.dedup import char_shingles
+from ..sources.session import evict_zip_finders
 
 DEFAULT_METHOD = "jaro_winkler"
 DEFAULT_THRESHOLD = 0.70
@@ -155,6 +156,7 @@ def jaro_winkler_batch(sa: list[str], sb: list[str]) -> np.ndarray:
 def jaro_winkler_udf():
     @F.pandas_udf(DoubleType())
     def _jw(a: pd.Series, b: pd.Series) -> pd.Series:
+        evict_zip_finders()
         return pd.Series(jaro_winkler_batch(a.tolist(), b.tolist()))
 
     return _jw

@@ -18,6 +18,7 @@ from pyspark.sql.types import DoubleType
 
 from ..core import similarity as sim
 from ..core.bloom import stack_binary
+from ..sources.session import evict_zip_finders
 
 
 def similarity_udf(method: str, n_bits: int):
@@ -25,6 +26,7 @@ def similarity_udf(method: str, n_bits: int):
 
     @F.pandas_udf(DoubleType())
     def _sim(a: pd.Series, b: pd.Series) -> pd.Series:
+        evict_zip_finders()
         am = stack_binary(a.tolist(), n_bits)
         bm = stack_binary(b.tolist(), n_bits)
         return pd.Series(sim.similarity(method, am, bm))
@@ -38,14 +40,11 @@ def attach_encodings(
     encoded_b: DataFrame | None = None,
     uid_col: str = "uid",
     bf_col: str = "bf",
-    broadcast_encodings: bool = False,
 ) -> DataFrame:
     """J3: (id_a, id_b, ...) x encodings -> + (bf_a, bf_b)."""
     encoded_b = encoded_b if encoded_b is not None else encoded_a
     ea = encoded_a.select(F.col(uid_col).alias("id_a"), F.col(bf_col).alias("bf_a"))
     eb = encoded_b.select(F.col(uid_col).alias("id_b"), F.col(bf_col).alias("bf_b"))
-    if broadcast_encodings:
-        ea, eb = F.broadcast(ea), F.broadcast(eb)
     return pairs.join(ea, "id_a").join(eb, "id_b")
 
 
@@ -86,10 +85,8 @@ def matched_pairs(
     threshold: float,
     n_bits: int,
     encoded_b: DataFrame | None = None,
-    broadcast_encodings: bool = False,
 ) -> DataFrame:
     """Full J3 -> K -> K5 chain: -> (id_a, id_b, sim)."""
-    with_bf = attach_encodings(pairs, encoded_a, encoded_b,
-                               broadcast_encodings=broadcast_encodings)
+    with_bf = attach_encodings(pairs, encoded_a, encoded_b)
     scored = score_pairs(with_bf, method, n_bits)
     return classify(scored, method, threshold).select("id_a", "id_b", "sim")

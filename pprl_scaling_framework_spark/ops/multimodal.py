@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
+from ..sources.session import evict_zip_finders
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("kind", StringType()),       # image | audio | video
@@ -327,6 +329,7 @@ def decode_image(
     strict = on_undecodable == "error"
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        evict_zip_finders()
         for pdf in batches:
             out = []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -359,6 +362,7 @@ def decode_audio(df: DataFrame, on_undecodable: str = "error") -> DataFrame:
     strict = on_undecodable == "error"
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        evict_zip_finders()
         for pdf in batches:
             out = []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -416,6 +420,7 @@ def decode_video(
     strict = on_undecodable == "error"
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        evict_zip_finders()
         for pdf in batches:
             out = []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -585,6 +590,7 @@ def resize_image(
     tw, th = target
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        evict_zip_finders()
         for pdf in batches:
             keep = []
             datas = []

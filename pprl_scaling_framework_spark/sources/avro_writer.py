@@ -21,6 +21,8 @@ import json
 import struct
 import zlib
 
+from .session import evict_zip_finders
+
 
 def _zigzag(n: int) -> bytes:
     u = (n << 1) ^ (n >> 63)
@@ -176,6 +178,7 @@ def write_avro_dataframe(
     def _write(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         from pyspark import TaskContext
 
+        evict_zip_finders()
         pid = TaskContext.get().partitionId()
         rows: list[dict] = []
         for pdf in batches:

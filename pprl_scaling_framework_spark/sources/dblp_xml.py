@@ -42,6 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from .session import evict_zip_finders
+
 PRIMARY_TAGS = (
     "article", "inproceedings", "proceedings", "book",
     "incollection", "www", "phdthesis", "mastersthesis",
@@ -227,6 +229,7 @@ def read_dblp_xml(
     ).repartition(n)
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        evict_zip_finders()
         for pdf in batches:
             rows: list[tuple[str, str, str, str]] = []
             for p, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):

@@ -3,12 +3,16 @@
 Replaces the reference's memory-profile / reducer-count plumbing
 (``mr-blocking/MemProfileUtil.java:11-56``, ``HammingLSHFPSToolV0.java:89-91``)
 with Spark conf: AQE (runtime re-planning + skew-join), Arrow batching sized
-for N-bit Bloom filters, and a tunable shuffle-partition count.
+for N-bit Bloom filters, and a tunable shuffle-partition count. Also holds
+:func:`evict_zip_finders`, which every library function that Spark runs in
+a Python worker calls on entry to shed a per-task setup cost.
 """
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -92,3 +96,26 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def evict_zip_finders() -> None:
+    """Drop every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    Spark's Python worker calls ``importlib.invalidate_caches()`` at the
+    start of every task (``pyspark/worker_util.py``, ``setup_spark_files``).
+    On CPython 3.11 and 3.12 that makes each cached zipimporter re-read its
+    whole archive directory: a worker that has run one pandas UDF holds 12
+    for package directories inside ``pyspark.zip`` (1,328 entries, ~9 ms
+    each) and 2 for the spark-core jar that Spark puts on the worker's
+    PYTHONPATH (5,359 entries, 30-37 ms each), 150-210 ms of CPU per task
+    before any UDF sees a row. A missing entry is rebuilt by the next import
+    that needs that path, from zipimport's directory cache, so evicting them
+    costs nothing later. Call it on entry to every function Spark runs in a
+    Python worker; it is cheap enough to run once per Arrow batch.
+
+    The rebuilt entry reuses the archive directory read earlier, so an
+    archive rewritten in place while the worker lives is not re-read.
+    """
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
+        cache.pop(path, None)

@@ -23,6 +23,8 @@ from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from ..sources.session import evict_zip_finders
+
 OUTPUT_SCHEMA = StructType([
     StructField("id_a", StringType()),
     StructField("id_b", StringType()),
@@ -40,9 +42,19 @@ def incremental_frequent_pairs(
     C: int,
     state_timeout_ms: int = 3_600_000,
 ) -> DataFrame:
-    """(id_a, id_b) collision-event stream -> pairs emitted once at count==C."""
+    """(id_a, id_b) collision-event stream -> pairs emitted once at count==C.
+
+    The processing-time timeout makes Spark schedule a batch on every
+    trigger, with or without new input, so a query started with
+    ``trigger(availableNow=True)`` never terminates on its own:
+    ``awaitTermination()`` and ``processAllAvailable()`` do not return. Stop
+    it once a batch read no rows and the source reports no data available
+    (``lastProgress["numInputRows"] == 0`` and not
+    ``status["isDataAvailable"]``).
+    """
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+        evict_zip_finders()
         if state.hasTimedOut:
             state.remove()
             return

@@ -44,6 +44,15 @@ def test_connected_components_known_graph(spark, thresh):
     assert got == want
 
 
+def test_connected_components_raises_without_convergence(spark):
+    # a 16-vertex path needs more than one large-star/small-star round
+    edges = spark.createDataFrame(
+        [(f"v{i:02d}", f"v{i + 1:02d}") for i in range(15)], ["id_a", "id_b"]
+    )
+    with pytest.raises(RuntimeError, match="max_iterations=1 "):
+        connected_components(edges, driver_threshold=0, max_iterations=1)
+
+
 def test_alternating_equals_label_propagation(spark):
     import random
 

@@ -19,6 +19,7 @@ is met on the BASELINE-specified synthetic repos input
 (tests/test_pipeline_e2e.py).
 """
 
+import os
 import re
 
 import numpy as np
@@ -40,6 +41,8 @@ HLSH_K = 15
 THETA = 128          # > max TM hamming (124) on this data
 DICE_T = 0.81        # best single-threshold operating point (sweep)
 ENTITY_RE = r"^[ab](\d+)"
+
+pytestmark = pytest.mark.skipif(not os.path.exists(BASE), reason="reference tree not mounted")
 
 
 @pytest.fixture(scope="module")

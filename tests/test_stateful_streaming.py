@@ -9,6 +9,29 @@ from pyspark.sql import functions as F
 from pprl_scaling_framework_spark.streaming.stateful import incremental_frequent_pairs
 
 
+def _stop_when_drained(q, timeout_s=180):
+    """Stop ``q`` once a batch read no rows and no input is left.
+
+    The pair-state timeout makes Spark run a batch on every trigger, so an
+    ``availableNow`` query never terminates by itself (see
+    ``incremental_frequent_pairs``); a completed batch's output is
+    committed before its progress is reported.
+    """
+    deadline = time.monotonic() + timeout_s
+    while time.monotonic() < deadline:
+        if q.exception() is not None:
+            raise q.exception()
+        if not q.isActive:
+            return
+        p = q.lastProgress
+        if p is not None and p["numInputRows"] == 0 and not q.status["isDataAvailable"]:
+            q.stop()
+            return
+        time.sleep(0.1)
+    q.stop()
+    raise AssertionError(f"query not drained within {timeout_s} s: {q.status}")
+
+
 def test_incremental_frequent_pairs_across_batches(spark, tmp_path):
     src = tmp_path / "events"
     src.mkdir()
@@ -34,7 +57,7 @@ def test_incremental_frequent_pairs_across_batches(spark, tmp_path):
         out.writeStream.format("memory").queryName("freq_mem")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    q.awaitTermination(180)
+    _stop_when_drained(q)
     rows = {(r["id_a"], r["id_b"]): r["collisions"]
             for r in spark.sql("SELECT * FROM freq_mem").collect()}
     assert rows.get(("x", "y")) == 2
@@ -75,7 +98,7 @@ def test_incremental_frequent_pairs_resume_from_checkpoint(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(180)
+        _stop_when_drained(q)
 
     run_query()  # processes b1, then terminates (the "kill" point)
     phase1 = {(r["id_a"], r["id_b"]): r["collisions"]
