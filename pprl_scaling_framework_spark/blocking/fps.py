@@ -26,44 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def bucket_stats(keys: DataFrame) -> DataFrame:
-    """A9: per-group key-cardinality / bucket-size statistics (drives salting)."""
-    return (
-        keys.groupBy("group_id", "key").agg(F.count("*").alias("bucket_size"))
-        .groupBy("group_id")
-        .agg(
-            F.count("*").alias("distinct_keys"),
-            F.sum("bucket_size").alias("records"),
-            F.max("bucket_size").alias("max_bucket"),
-            F.expr("percentile_approx(bucket_size, 0.99)").alias("p99_bucket"),
-        )
-    )
-
-
-def _salted_sides(
-    keys_a: DataFrame,
-    keys_b: DataFrame,
-    hot_threshold: int,
-    shards: int,
-    max_bucket: int | None = None,
-    bucket_cols: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Attach salt columns; optionally drop uninformative mega-buckets.
-
-    Delegates to the shared skew tiering in ``ops.bucket_join.salted_sides``
-    (same logic serves the LSH dedup/similarity operators). Mega-buckets
-    (> max_bucket) come from low-information key patterns shared by
-    thousands of records; they contribute the vast majority of join volume
-    while a true pair's C>=2 evidence overwhelmingly comes from its small
-    buckets (E[collisions] across L groups >> C for pairs under theta).
-    """
-    from ..ops.bucket_join import salted_sides
-
-    return salted_sides(
-        keys_a, keys_b, bucket_cols or ["group_id", "key"], "uid",
-        hot_threshold, shards, max_bucket,
-    )
+from ..ops.bucket_join import salted_sides
 
 
 def candidate_pairs(
@@ -151,8 +114,11 @@ def candidate_pairs(
     # when `keys_a is keys_b` and on the union of both sides otherwise
     kb = ka if self_join else _packed(_rid_keys(keys_b))
 
-    a, b = _salted_sides(
-        ka, kb, hot_threshold, shards, max_bucket, bucket_cols=bucket_cols
+    # mega-buckets (> max_bucket) come from low-information key patterns
+    # shared by thousands of records: they carry most of the join volume,
+    # while a true pair's C>=2 evidence comes from its small buckets
+    a, b = salted_sides(
+        ka, kb, bucket_cols, "uid", hot_threshold, shards, max_bucket
     )
     joined = a.alias("a").join(
         b.alias("b"), [*bucket_cols, "salt"], "inner"

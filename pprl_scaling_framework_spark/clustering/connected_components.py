@@ -14,8 +14,7 @@ GraphFrames' default, expressed as pure DataFrame joins + min-aggregations:
 
 Converges in O(log n) rounds; each round is checkpointed (localCheckpoint)
 to cut the lineage — the iteration itself is driver-side control flow, all
-data work stays distributed. A simple min-label-propagation variant is kept
-for cross-checking in tests.
+data work stays distributed.
 """
 
 from __future__ import annotations
@@ -192,49 +191,3 @@ def connected_components(
             F.coalesce("entity_id", F.col("uid")).alias("entity_id"),
         )
     )
-
-
-def label_propagation_components(
-    pairs: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 50,
-) -> DataFrame:
-    """Naive min-label propagation — O(diameter) rounds; test oracle only."""
-    edges = _canon(
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    )
-    both = edges.unionAll(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint()
-    labels = (
-        both.select(F.col("src").alias("uid"))
-        .distinct()
-        .withColumn("entity_id", F.col("uid"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iterations):
-        nbr_min = (
-            both.join(labels.withColumnRenamed("uid", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.min("entity_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.uid == nbr_min.src, "left")
-            .select(
-                "uid",
-                F.least(F.col("entity_id"), F.coalesce("nbr_min", "entity_id")).alias("entity_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "uid")
-            .filter(F.col("n.entity_id") != F.col("o.entity_id"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType
 
-from ..sources.session import evict_zip_finders
+from ..sources.session import worker_task_setup
 from .batch_kernel import BatchEncoder
 from .schemes import EncodingConfig
 
@@ -31,7 +31,7 @@ def encode_udf(config: EncodingConfig):
 
     @F.pandas_udf(BinaryType())
     def _encode(*cols):
-        evict_zip_finders()
+        worker_task_setup()
         enc = holder.get("enc")
         if enc is None:
             enc = BatchEncoder(EncodingConfig.from_json(cfg_json))

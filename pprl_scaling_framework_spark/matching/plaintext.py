@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from ..ops.dedup import char_shingles
-from ..sources.session import evict_zip_finders
+from ..sources.session import worker_task_setup
 
 DEFAULT_METHOD = "jaro_winkler"
 DEFAULT_THRESHOLD = 0.70
@@ -156,7 +156,7 @@ def jaro_winkler_batch(sa: list[str], sb: list[str]) -> np.ndarray:
 def jaro_winkler_udf():
     @F.pandas_udf(DoubleType())
     def _jw(a: pd.Series, b: pd.Series) -> pd.Series:
-        evict_zip_finders()
+        worker_task_setup()
         return pd.Series(jaro_winkler_batch(a.tolist(), b.tolist()))
 
     return _jw

@@ -18,7 +18,7 @@ from pyspark.sql.types import DoubleType
 
 from ..core import similarity as sim
 from ..core.bloom import stack_binary
-from ..sources.session import evict_zip_finders
+from ..sources.session import worker_task_setup
 
 
 def similarity_udf(method: str, n_bits: int):
@@ -26,7 +26,7 @@ def similarity_udf(method: str, n_bits: int):
 
     @F.pandas_udf(DoubleType())
     def _sim(a: pd.Series, b: pd.Series) -> pd.Series:
-        evict_zip_finders()
+        worker_task_setup()
         am = stack_binary(a.tolist(), n_bits)
         bm = stack_binary(b.tolist(), n_bits)
         return pd.Series(sim.similarity(method, am, bm))

@@ -14,8 +14,6 @@ Codec layer (no external media libraries needed):
   parser's sibling): frame sampling + per-frame intensity via
   :func:`decode_video`, golden-tested against an independent parser
   (``media_video`` driver query).
-- PIL, when importable, extends :func:`decode_image` to compressed formats
-  (JPEG/PNG/...).
 - The 16-byte 'FAKE' synthetic header remains as the plumbing-test format.
 
 Undecodable payloads raise by default (``on_undecodable='error'``) — silent
@@ -24,13 +22,8 @@ row drops are data loss; pass ``'skip'`` explicitly for lossy ingest.
 
 from __future__ import annotations
 
-import importlib.util
 import struct
 from typing import Iterator
-
-
-def _pil_available() -> bool:
-    return importlib.util.find_spec("PIL") is not None
 
 import numpy as np
 import pandas as pd
@@ -41,7 +34,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
-from ..sources.session import evict_zip_finders
+from ..sources.session import worker_task_setup
 
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -276,37 +269,15 @@ def decode_avi(data: bytes) -> tuple[int, int, int, list[np.ndarray]] | None:
     return w, h, usec, frames
 
 
-def decode_pixels(data: bytes, use_pil: bool = False) -> tuple[int, int, int, np.ndarray] | None:
+def decode_pixels(data: bytes) -> tuple[int, int, int, np.ndarray] | None:
     """(width, height, channels, flat uint8 pixels) or None.
 
-    Codec chain: FAKE synthetic header -> PPM (P6) -> BMP (24-bit) ->
-    optionally PIL for compressed formats.
+    Codec chain: FAKE synthetic header -> PPM (P6) -> BMP (24-bit).
     """
     if data[:4] == _MAGIC:
         w, h, c = struct.unpack("<III", data[4:16])
         return w, h, c, np.frombuffer(data[16:16 + w * h * c], dtype=np.uint8)
-    decoded = decode_ppm(data) or decode_bmp(data)
-    if decoded is not None:
-        return decoded
-    if use_pil:
-        import io
-
-        try:
-            from PIL import Image
-        except ImportError as exc:  # driver had PIL, executor doesn't
-            raise RuntimeError(
-                "PIL importable on the driver but not on executors — "
-                "ship it via --py-files/conda env"
-            ) from exc
-
-        try:
-            img = Image.open(io.BytesIO(data))
-            arr = np.asarray(img)
-        except Exception:
-            return None
-        c = 1 if arr.ndim == 2 else arr.shape[2]
-        return img.width, img.height, c, arr.astype(np.uint8).ravel()
-    return None
+    return decode_ppm(data) or decode_bmp(data)
 
 
 def decode_image(
@@ -317,23 +288,21 @@ def decode_image(
 ) -> DataFrame:
     """Decode + feature-extract via mapInPandas (Arrow-batched).
 
-    PPM/BMP/FAKE decode with the built-in pure-Python codecs on any executor;
-    PIL (when importable) extends coverage to compressed formats. A payload
-    no codec accepts raises (default) — silent row drops are data loss — or
-    is skipped with ``on_undecodable='skip'``.
+    PPM/BMP/FAKE decode with the built-in pure-Python codecs on any executor.
+    A payload no codec accepts raises (default) — silent row drops are data
+    loss — or is skipped with ``on_undecodable='skip'``.
     """
     del fake
     if on_undecodable not in ("error", "skip"):
         raise ValueError("on_undecodable must be 'error' or 'skip'")
-    use_pil = _pil_available()
     strict = on_undecodable == "error"
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        evict_zip_finders()
+        worker_task_setup()
         for pdf in batches:
             out = []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
-                decoded = decode_pixels(bytes(data), use_pil)
+                decoded = decode_pixels(bytes(data))
                 if decoded is None:
                     if strict:
                         raise ValueError(
@@ -362,7 +331,7 @@ def decode_audio(df: DataFrame, on_undecodable: str = "error") -> DataFrame:
     strict = on_undecodable == "error"
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        evict_zip_finders()
+        worker_task_setup()
         for pdf in batches:
             out = []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -420,7 +389,7 @@ def decode_video(
     strict = on_undecodable == "error"
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        evict_zip_finders()
+        worker_task_setup()
         for pdf in batches:
             out = []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -586,18 +555,17 @@ def resize_image(
     if on_undecodable not in ("error", "skip"):
         raise ValueError("on_undecodable must be 'error' or 'skip'")
     strict = on_undecodable == "error"
-    use_pil = _pil_available()
     tw, th = target
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        evict_zip_finders()
+        worker_task_setup()
         for pdf in batches:
             keep = []
             datas = []
             metas = []
             for k, (data, mid) in enumerate(zip(pdf["data"], pdf["media_id"])):
                 raw = bytes(data)
-                decoded = decode_pixels(raw, use_pil)
+                decoded = decode_pixels(raw)
                 if decoded is None:
                     if strict:
                         raise ValueError(

@@ -119,34 +119,6 @@ def expand_clusters(clusters_rep: DataFrame, uid_to_rep: DataFrame) -> DataFrame
     )
 
 
-def expand_matched_pairs(
-    matches_rep: DataFrame, uid_to_rep: DataFrame
-) -> DataFrame:
-    """Full pair set implied by rep-level matches + same-digest groups.
-
-    Quadratic in duplicate-group size — evaluation/test helper only; the
-    scalable deliverable is :func:`expand_clusters`.
-    """
-    m = uid_to_rep
-    rep_pairs = (
-        matches_rep.withColumnRenamed("id_a", "rep_a").withColumnRenamed("id_b", "rep_b")
-        .join(m.select(F.col("uid").alias("id_a"), F.col("rep_uid").alias("rep_a")), "rep_a")
-        .join(m.select(F.col("uid").alias("id_b"), F.col("rep_uid").alias("rep_b")), "rep_b")
-        .select("id_a", "id_b")
-    )
-    same_digest = (
-        m.alias("x").join(m.alias("y"), F.col("x.rep_uid") == F.col("y.rep_uid"))
-        .filter(F.col("x.uid") < F.col("y.uid"))
-        .select(F.col("x.uid").alias("id_a"), F.col("y.uid").alias("id_b"))
-    )
-    return (
-        rep_pairs.select(F.least("id_a", "id_b").alias("id_a"),
-                         F.greatest("id_a", "id_b").alias("id_b"))
-        .unionByName(same_digest)
-        .distinct()
-    )
-
-
 def run_dedup_pipeline(
     spark: SparkSession,
     records: DataFrame,

@@ -1,5 +1,5 @@
-"""Stage checkpointing with an append-only snapshot log, lineage metrics,
-and snapshot-pinned resume.
+"""Stage checkpointing with an append-only snapshot log, footer-counted
+metrics, and snapshot-pinned resume.
 
 Spark-first replacement for the reference's per-MR-job HDFS materialization
 with ``FAILED_*`` rename recovery and counter threading
@@ -8,8 +8,10 @@ Iceberg-style table semantics (SURVEY §1.1) within plain parquet:
 
 - every stage owns an APPEND-ONLY log of immutable snapshots
   (``run_dir/<stage>/snap-00001/ ...``) plus a manifest entry recording, per
-  snapshot: row count, wall seconds, per-partition row histogram (lineage),
-  the result schema, and an optional input FINGERPRINT;
+  snapshot: row count, wall seconds, per-file row counts (read from the
+  written parquet footers on the driver, so a stage runs no Spark job
+  beyond its write, as the reference's counters came free with each MR
+  job's output), the result schema, and an optional input FINGERPRINT;
 - resume is pinned to snapshots, not directory presence: ``run(name, build,
   fingerprint=...)`` reuses the current snapshot only while the fingerprint
   matches; a changed input appends a NEW snapshot and the old one stays
@@ -42,11 +44,21 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @dataclass
 class StageMetrics:
+    """What one committed snapshot holds, counted from its parquet footers.
+
+    ``partition_rows`` maps ``"0"``, ``"1"``, ... to the row count of each
+    written part file, in file-name order, and ``partitions`` is the number
+    of files. Spark writes no file for an empty partition, so a
+    ``repartition(7)`` of 3 rows reports 3 entries; a stage with no rows at
+    all writes one empty file and reports ``{"0": 0}``. These are the
+    write's partitions, not the splits a later read of the snapshot gets
+    (a read merges small files into fewer splits).
+    """
+
     name: str
     rows: int
     seconds: float
@@ -72,10 +84,9 @@ class StageRunner:
     #: so 64 losses in a row means pathological contention, not livelock)
     MAX_COMMIT_RETRIES = 64
 
-    def __init__(self, spark: SparkSession, run_dir: str, collect_lineage: bool = True) -> None:
+    def __init__(self, spark: SparkSession, run_dir: str) -> None:
         self.spark = spark
         self.run_dir = run_dir
-        self.collect_lineage = collect_lineage
         os.makedirs(run_dir, exist_ok=True)
         self.manifest_dir = os.path.join(run_dir, "_manifest")
         os.makedirs(self.manifest_dir, exist_ok=True)
@@ -347,19 +358,20 @@ class StageRunner:
 
             self._commit(apply_failed)
             raise
-        out = self.spark.read.parquet(path)
-        seconds = time.time() - t0
+        # the write already knows what the commit records: the schema is
+        # df's and the row counts sit in the part files' parquet footers, so
+        # neither the read-back nor the metrics start a Spark job
+        import pyarrow.parquet as pq  # lazy: ~2 MB of driver PSS, stage runs only
 
-        if self.collect_lineage:
-            pr = {
-                str(r["pid"]): r["n"]
-                for r in out.groupBy(F.spark_partition_id().alias("pid"))
-                .agg(F.count("*").alias("n")).collect()
-            }
-            rows = sum(pr.values())
-            partitions = len(pr)
-        else:
-            pr, rows, partitions = {}, out.count(), out.rdd.getNumPartitions()
+        out = self.spark.read.schema(df.schema).parquet(path)
+        seconds = time.time() - t0
+        files = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+        pr = {
+            str(i): pq.read_metadata(os.path.join(path, f)).num_rows
+            for i, f in enumerate(files)
+        }
+        rows = sum(pr.values())
+        partitions = len(pr)
 
         metrics = StageMetrics(
             name=name, rows=rows, seconds=round(seconds, 3),

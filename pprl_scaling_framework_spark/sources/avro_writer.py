@@ -21,7 +21,7 @@ import json
 import struct
 import zlib
 
-from .session import evict_zip_finders
+from .session import worker_task_setup
 
 
 def _zigzag(n: int) -> bytes:
@@ -178,7 +178,7 @@ def write_avro_dataframe(
     def _write(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         from pyspark import TaskContext
 
-        evict_zip_finders()
+        worker_task_setup()
         pid = TaskContext.get().partitionId()
         rows: list[dict] = []
         for pdf in batches:

@@ -42,7 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .session import evict_zip_finders
+from .session import worker_task_setup
 
 PRIMARY_TAGS = (
     "article", "inproceedings", "proceedings", "book",
@@ -229,7 +229,7 @@ def read_dblp_xml(
     ).repartition(n)
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        evict_zip_finders()
+        worker_task_setup()
         for pdf in batches:
             rows: list[tuple[str, str, str, str]] = []
             for p, s, e in zip(pdf["path"], pdf["start"], pdf["end"]):

@@ -4,12 +4,13 @@ Replaces the reference's memory-profile / reducer-count plumbing
 (``mr-blocking/MemProfileUtil.java:11-56``, ``HammingLSHFPSToolV0.java:89-91``)
 with Spark conf: AQE (runtime re-planning + skew-join), Arrow batching sized
 for N-bit Bloom filters, and a tunable shuffle-partition count. Also holds
-:func:`evict_zip_finders`, which every library function that Spark runs in
-a Python worker calls on entry to shed a per-task setup cost.
+:func:`worker_task_setup`, which every library function that Spark runs in
+a Python worker calls on entry to shed per-task costs.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -98,24 +99,42 @@ def build_session(
     return b.getOrCreate()
 
 
-def evict_zip_finders() -> None:
-    """Drop every ``zipimporter`` from ``sys.path_importer_cache``.
+#: set once this process has frozen its heap (see worker_task_setup)
+_gc_frozen = False
 
-    Spark's Python worker calls ``importlib.invalidate_caches()`` at the
-    start of every task (``pyspark/worker_util.py``, ``setup_spark_files``).
-    On CPython 3.11 and 3.12 that makes each cached zipimporter re-read its
-    whole archive directory: a worker that has run one pandas UDF holds 12
-    for package directories inside ``pyspark.zip`` (1,328 entries, ~9 ms
-    each) and 2 for the spark-core jar that Spark puts on the worker's
-    PYTHONPATH (5,359 entries, 30-37 ms each), 150-210 ms of CPU per task
-    before any UDF sees a row. A missing entry is rebuilt by the next import
-    that needs that path, from zipimport's directory cache, so evicting them
-    costs nothing later. Call it on entry to every function Spark runs in a
-    Python worker; it is cheap enough to run once per Arrow batch.
 
-    The rebuilt entry reuses the archive directory read earlier, so an
-    archive rewritten in place while the worker lives is not re-read.
+def worker_task_setup() -> None:
+    """Shed two per-task costs of a reused Python worker.
+
+    Call it on entry to every function Spark runs in a Python worker; it is
+    cheap enough to run once per Arrow batch.
+
+    1. Drop every ``zipimporter`` from ``sys.path_importer_cache``. Spark's
+       worker calls ``importlib.invalidate_caches()`` at the start of every
+       task (``pyspark/worker_util.py``, ``setup_spark_files``). On CPython
+       3.11 and 3.12 that makes each cached zipimporter re-read its whole
+       archive directory: a worker that has run one pandas UDF holds 12 for
+       package directories inside ``pyspark.zip`` (1,328 entries, ~9 ms
+       each) and 2 for the spark-core jar that Spark puts on the worker's
+       PYTHONPATH (5,359 entries, 30-37 ms each), 150-210 ms of CPU per
+       task before any UDF sees a row. A missing entry is rebuilt by the
+       next import that needs that path, from zipimport's directory cache,
+       so evicting them costs nothing later. The rebuilt entry reuses the
+       archive directory read earlier, so an archive rewritten in place
+       while the worker lives is not re-read.
+    2. Once per process, ``gc.freeze()``. When pyspark's daemon reuses a
+       worker it runs ``gc.collect()`` after every task
+       (``pyspark/daemon.py``), and with pandas, pyarrow and numpy loaded
+       each full collection walks all their objects: a no-op pandas UDF
+       costs 37-40 ms of worker CPU per task without the freeze and 2.5 ms
+       with it. Frozen objects are skipped by the cycle collector only;
+       refcounting still frees them. The cost: cyclic garbage already
+       present when the first task runs stays until the worker exits.
     """
+    global _gc_frozen
     cache = sys.path_importer_cache
     for path in [p for p, f in cache.items() if isinstance(f, zipimport.zipimporter)]:
         cache.pop(path, None)
+    if not _gc_frozen:
+        gc.freeze()
+        _gc_frozen = True

@@ -23,7 +23,7 @@ from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from ..sources.session import evict_zip_finders
+from ..sources.session import worker_task_setup
 
 OUTPUT_SCHEMA = StructType([
     StructField("id_a", StringType()),
@@ -54,7 +54,7 @@ def incremental_frequent_pairs(
     """
 
     def update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        evict_zip_finders()
+        worker_task_setup()
         if state.hasTimedOut:
             state.remove()
             return

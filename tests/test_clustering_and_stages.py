@@ -1,5 +1,5 @@
 """Connected components (alternating vs label-prop vs known answer) and
-StageRunner checkpoint/resume/lineage tests."""
+StageRunner checkpoint/resume/metrics tests."""
 
 import json
 import os
@@ -9,9 +9,9 @@ from pyspark.sql import functions as F
 
 from pprl_scaling_framework_spark.clustering.connected_components import (
     connected_components,
-    label_propagation_components,
 )
 from pprl_scaling_framework_spark.pipeline.stages import StageRunner
+from pprl_test_helpers import label_propagation_components
 
 
 def _components_dict(df):
@@ -90,12 +90,74 @@ def test_stage_runner_checkpoint_resume(spark, tmp_path):
     assert calls["n"] == 1
     assert df3.count() == 100
 
-    # lineage metrics recorded
+    # footer metrics recorded
     m = runner2.manifest["stages"]["stage_a"]["metrics"]
     assert m["rows"] == 100
     assert m["partitions"] >= 1
     assert sum(m["partition_rows"].values()) == 100
     assert os.path.exists(os.path.join(run_dir, "manifest.json"))
+
+
+def _jobs_in_group(spark, group, action):
+    """(#Spark jobs ``action`` ran, its result), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_stage_runner_write_is_the_only_job(spark, tmp_path):
+    """A stage commits with its write job(s) alone: the read-back takes the
+    built schema and the metrics come from the parquet footers."""
+    from pyspark.sql.types import (
+        ArrayType, BinaryType, IntegerType, LongType, MapType, StringType,
+        StructField, StructType,
+    )
+
+    runner = StageRunner(spark, str(tmp_path / "run_jobs"))
+    schema = StructType([
+        StructField("uid", IntegerType(), nullable=False),
+        StructField("bf", BinaryType()),
+        StructField("keys", ArrayType(LongType(), containsNull=False)),
+        StructField("attrs", MapType(StringType(), StringType())),
+    ])
+    data = [(i, bytes([i, 255 - i]), [i, i * 2], {"k": str(i)}) for i in range(20)]
+    n, out = _jobs_in_group(spark, "stage_narrow", lambda: runner.run(
+        "typed", lambda: spark.createDataFrame(data, schema)))
+    assert n == 1
+    path = runner._snapshot_path("typed", runner.current_snapshot_id("typed"))
+    assert out.schema == spark.read.parquet(path).schema
+    assert sorted(out.collect()) == sorted(spark.createDataFrame(data, schema).collect())
+
+    n, out = _jobs_in_group(spark, "stage_shuffled", lambda: runner.run(
+        "grouped", lambda: spark.range(100).groupBy(
+            (F.col("id") % 5).alias("k")).count()))
+    assert n == 2
+    assert out.count() == 5
+
+
+def test_stage_runner_partition_rows_from_footers(spark, tmp_path):
+    """partition_rows counts the rows of each written file: a 7-way
+    repartition reports 7 entries (the read-back merges them into fewer
+    splits), and an empty stage reports its one empty file."""
+    runner = StageRunner(spark, str(tmp_path / "run_footers"))
+    runner.run("rep", lambda: spark.range(1000), repartition=7)
+    m = runner.manifest["stages"]["rep"]["metrics"]
+    assert m["partitions"] == 7
+    assert sorted(m["partition_rows"]) == [str(i) for i in range(7)]
+    assert sum(m["partition_rows"].values()) == m["rows"] == 1000
+    assert runner.read("rep").count() == 1000
+
+    runner.run("empty", lambda: spark.range(10).filter(F.col("id") < 0))
+    m = runner.manifest["stages"]["empty"]["metrics"]
+    assert m["rows"] == 0
+    assert m["partition_rows"] == {"0": 0}
+    assert runner.read("empty").count() == 0
 
 
 def test_stage_runner_snapshot_log_and_time_travel(spark, tmp_path):
@@ -229,7 +291,7 @@ def test_stage_runner_concurrent_writers(spark, tmp_path):
 
     def writer(tag: str, val: int):
         try:
-            r = StageRunner(spark, run_dir, collect_lineage=False)
+            r = StageRunner(spark, run_dir)
             barrier.wait()
             r.run("shared", lambda: spark.range(val).select(
                 F.lit(tag).alias("writer"), "id"), fingerprint=tag)
@@ -279,7 +341,7 @@ def test_stage_runner_manifest_compaction_and_latest_hint(spark, tmp_path):
     time travel; the LATEST hint makes loads O(commits since hint) and a
     stale/pruned hint falls back to a full scan instead of misreading."""
     run_dir = str(tmp_path / "run_compact")
-    r = StageRunner(spark, run_dir, collect_lineage=False)
+    r = StageRunner(spark, run_dir)
     for i in range(1, 13):
         r.run("s", lambda i=i: spark.range(i), fingerprint=f"v{i}")
     mdir = os.path.join(run_dir, "_manifest")

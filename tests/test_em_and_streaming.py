@@ -83,8 +83,9 @@ def test_calc_data_stats_e2e(spark):
 def test_fbf_and_rbf_pipeline_variants(spark):
     from pprl_scaling_framework_spark.encoding import schemes
     from pprl_scaling_framework_spark.pipeline.linkage import (
-        LinkageConfig, pairwise_f1, run_dedup_pipeline, expand_matched_pairs,
+        LinkageConfig, pairwise_f1, run_dedup_pipeline,
     )
+    from pprl_test_helpers import expand_matched_pairs
     from pprl_scaling_framework_spark.sources import repos as repos_src
 
     records = repos_src.with_uid_and_sha(

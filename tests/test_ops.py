@@ -468,47 +468,6 @@ def test_decode_avi_frame_before_avih_is_malformed():
     assert multimodal.decode_avi(reordered) is None
 
 
-def test_media_decode_pil_branch(spark):
-    """PIL-present coverage (skipped in environments without PIL): the
-    use_pil branch must decode a real PNG and honor the skip/error
-    contract for undecodable payloads."""
-    import io
-
-    import numpy as np
-    import pytest
-
-    PIL = pytest.importorskip("PIL")
-    from PIL import Image
-
-    from pprl_scaling_framework_spark.ops import multimodal
-
-    w, h = 6, 4
-    px = (np.arange(w * h * 3, dtype=np.uint8) * 7 % 256).reshape(h, w, 3)
-    buf = io.BytesIO()
-    Image.fromarray(px, "RGB").save(buf, format="PNG")
-    rows = [
-        (1, "image", "image/png", bytearray(buf.getvalue()),
-         {"width": w, "height": h, "channels": 3, "duration_ms": None,
-          "sample_rate": None, "n_frames": None}),
-        (2, "image", "application/octet-stream", bytearray(b"\x99garbage\x00" * 4),
-         {"width": None, "height": None, "channels": None, "duration_ms": None,
-          "sample_rate": None, "n_frames": None}),
-    ]
-    df = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-
-    ok = multimodal.decode_image(df.filter("media_id = 1")).collect()
-    assert len(ok) == 1
-    assert (ok[0]["width"], ok[0]["height"], ok[0]["channels"]) == (w, h, 3)
-    assert abs(ok[0]["mean_intensity"] - float(px.mean())) < 1e-6
-
-    # skip contract: garbage dropped, PNG kept
-    kept = multimodal.decode_image(df, on_undecodable="skip").collect()
-    assert [r["media_id"] for r in kept] == [1]
-    # error contract: garbage raises
-    with pytest.raises(Exception):
-        multimodal.decode_image(df).collect()
-
-
 def test_ivf_topk_recall_and_path_parity(emb):
     """IVF-Flat ANN: (a) probing more cells monotonically approaches the
     exact answer (n_probe == n_cells == exhaustive -> identical to brute

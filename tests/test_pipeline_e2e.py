@@ -60,7 +60,7 @@ def test_sha256_invariant(records):
 
 
 def test_dedup_pipeline_f1(spark, records):
-    from pprl_scaling_framework_spark.pipeline.linkage import expand_matched_pairs
+    from pprl_test_helpers import expand_matched_pairs
 
     res = run_dedup_pipeline(spark, records, CFG)
     predicted = expand_matched_pairs(res.matched_pairs, res.uid_to_rep)

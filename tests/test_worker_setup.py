@@ -1,7 +1,9 @@
-"""Per-task Python-worker setup: ``evict_zip_finders`` and the UDFs that call
+"""Per-task Python-worker setup: ``worker_task_setup`` and the UDFs that call
 it. No Spark session: the UDFs' Python functions run in this process."""
 
 import importlib
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -13,9 +15,18 @@ from pprl_scaling_framework_spark.blocking.hlsh import hlsh_keys_udf, position_m
 from pprl_scaling_framework_spark.encoding.encode import encode_udf
 from pprl_scaling_framework_spark.encoding.schemes import clk
 from pprl_scaling_framework_spark.matching.score import similarity_udf
-from pprl_scaling_framework_spark.sources.session import evict_zip_finders
+from pprl_scaling_framework_spark.sources import session
+from pprl_scaling_framework_spark.sources.session import worker_task_setup
 
 MODULES = ("zipped_first", "zipped_second")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.fixture(autouse=True)
+def _no_gc_freeze(monkeypatch):
+    """Keep the test process's heap unfrozen: the gc.freeze step is checked
+    in a fresh interpreter by test_worker_task_setup_freezes_gc_once."""
+    monkeypatch.setattr(session, "_gc_frozen", True)
 
 
 @pytest.fixture
@@ -43,7 +54,7 @@ def test_evict_zip_finders_keeps_zip_importable(zip_on_path):
     assert first.VALUE == 1
     assert isinstance(sys.path_importer_cache[zip_on_path], zipimport.zipimporter)
 
-    evict_zip_finders()
+    worker_task_setup()
     assert _zip_finders() == []
 
     # the next import that needs the zip rebuilds its finder
@@ -68,3 +79,21 @@ def test_benchmark_path_udfs_evict_zip_finders(zip_on_path):
         out = call()
         assert len(out) == len(contents), name
         assert zip_on_path not in sys.path_importer_cache, name
+
+
+def test_worker_task_setup_freezes_gc_once():
+    code = (
+        "import gc\n"
+        "from pprl_scaling_framework_spark.sources.session import worker_task_setup\n"
+        "assert gc.get_freeze_count() == 0\n"
+        "worker_task_setup()\n"
+        "frozen = gc.get_freeze_count()\n"
+        "new_objects = [[] for _ in range(1000)]\n"
+        "worker_task_setup()\n"
+        "print(frozen, gc.get_freeze_count())\n"
+    )
+    done = subprocess.run([sys.executable, "-c", code], cwd=REPO, timeout=120,
+                          capture_output=True, text=True, check=True)
+    first, second = map(int, done.stdout.split())
+    assert first > 0
+    assert second == first  # the second task froze nothing new
