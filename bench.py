@@ -79,42 +79,57 @@ def bench_config():
     )
 
 
+class _TimingRunner:
+    """Stage hook of the staged mode: persists, counts and times each stage
+    the library pipeline hands it (``run(name, build)``, as StageRunner)."""
+
+    #: stage name -> its key in bench's ``counts``
+    COUNT_KEYS = {"encode": "rep_records", "block": "blocking_keys",
+                  "candidates": "candidate_pairs", "match": "matched_pairs"}
+
+    def __init__(self) -> None:
+        self.timings: dict[str, float] = {}
+        self.counts: dict[str, int] = {}
+        self.persisted: list = []
+
+    def run(self, name, build):
+        s = time.time()
+        df = build().persist()
+        self.persisted.append(df)
+        n = df.count()
+        # bench reports cluster + expansion as one "cluster" stage
+        key = "cluster" if name == "cluster_expand" else name
+        self.timings[key] = self.timings.get(key, 0.0) + time.time() - s
+        if name in self.COUNT_KEYS:
+            self.counts[self.COUNT_KEYS[name]] = n
+        return df
+
+
 def run_pipeline(
     spark, n_entities: int, cluster: bool = True,
     input_path: str | None = None, fused: bool = False,
 ) -> dict:
-    """Flagship pipeline with per-stage wall times; returns timings + counts.
+    """Flagship pipeline (``run_dedup_pipeline``) with per-stage wall times;
+    returns timings + counts.
 
     ``input_path``: read a pre-generated records parquet instead of
     synthesizing inline (the scaling probe generates ONCE at full parallelism
     so every measured config runs the identical bytes; load stays excluded
     from the work metric either way).
 
-    ``fused``: skip the per-stage count() barriers and materialize the whole
-    encode->block->candidates->match chain with a single action — how a real
-    spark-submit job runs. The staged mode's 5 extra driver jobs (persist
-    barriers + AQE re-plans per stage) are pure parallelism-independent
-    overhead that distorts the N-vs-4N ratio; fused mode only keeps the
-    persists that prevent recompute (encoded, keys feed multiple consumers).
+    ``fused``: the library's no-runner path — no per-stage count()
+    barriers, the collapse->encode->block->candidates->match chain
+    materializes with a single action, as a real spark-submit job runs it.
+    The staged mode's extra driver jobs (persist barriers + AQE re-plans per
+    stage) are pure parallelism-independent overhead that distorts the
+    N-vs-4N ratio; the no-runner path only persists the stage outputs with
+    more than one consumer (encoded, keys).
     """
-    from pyspark.sql import functions as F
-
-    from pprl_scaling_framework_spark.blocking import fps, hlsh
-    from pprl_scaling_framework_spark.clustering.connected_components import (
-        connected_components,
-    )
-    from pprl_scaling_framework_spark.encoding.encode import encode_dataframe
-    from pprl_scaling_framework_spark.matching.score import matched_pairs
+    from pprl_scaling_framework_spark.pipeline.linkage import run_dedup_pipeline
     from pprl_scaling_framework_spark.sources import repos as repos_src
 
-    from pprl_scaling_framework_spark.pipeline.linkage import (
-        collapse_exact_duplicates,
-        expand_clusters,
-    )
-
+    assert not (fused and cluster), "fused mode measures the linear chain only"
     cfg = bench_config()
-    plan = cfg.plan()
-    n_bits = cfg.encoding.total_bits
     t: dict[str, float] = {}
     counts: dict[str, int] = {}
 
@@ -129,70 +144,27 @@ def run_pipeline(
     counts["records"] = records.count()
     t["generate"] = time.time() - s
 
-    if fused:
-        assert not cluster, "fused mode measures the linear chain only"
-        s = time.time()
-        rep_records, uid_to_rep = collapse_exact_duplicates(records, "uid", "content")
-        encoded = encode_dataframe(rep_records, cfg.encoding, included=["uid"]).persist()
-        pos = hlsh.position_matrix(plan.L, cfg.hlsh_K, n_bits, cfg.hlsh_seed)
-        keys = hlsh.blocking_keys(encoded, "uid", "bf", pos, n_bits, hash_uid=True).persist()
-        cands = fps.candidate_pairs(
-            keys, None, C=plan.C, hot_threshold=cfg.hot_threshold,
-            shards=cfg.salt_shards, self_join=True,
-            max_bucket=cfg.max_bucket, uids_a=encoded,
-            key_bits=cfg.hlsh_K, n_groups=plan.L, uids_hashed=True,
-        )
-        matches = matched_pairs(cands, encoded, cfg.method, cfg.threshold, n_bits)
-        counts["matched_pairs"] = matches.count()
+    runner = None if fused else _TimingRunner()
+    s = time.time()
+    res = run_dedup_pipeline(spark, records, cfg, runner=runner, cluster=cluster)
+    if runner is None:
+        counts["matched_pairs"] = res.matched_pairs.count()
         t["work"] = time.time() - s
-        t["total"] = time.time() - t0
-        t["total_ex_generate"] = t["work"]
-        for df in (records, encoded, keys):
-            df.unpersist()
-        return {"timings": t, "counts": counts, "plan": {"C": plan.C, "L": plan.L}}
-
-    s = time.time()
-    rep_records, uid_to_rep = collapse_exact_duplicates(records, "uid", "content")
-    uid_to_rep = uid_to_rep.persist()
-    uid_to_rep.count()
-    t["exact_collapse"] = time.time() - s
-
-    s = time.time()
-    encoded = encode_dataframe(rep_records, cfg.encoding, included=["uid"]).persist()
-    counts["rep_records"] = encoded.count()
-    t["encode"] = time.time() - s
-
-    s = time.time()
-    pos = hlsh.position_matrix(plan.L, cfg.hlsh_K, n_bits, cfg.hlsh_seed)
-    keys = hlsh.blocking_keys(encoded, "uid", "bf", pos, n_bits, hash_uid=True).persist()
-    counts["blocking_keys"] = keys.count()
-    t["block"] = time.time() - s
-
-    s = time.time()
-    cands = fps.candidate_pairs(
-        keys, None, C=plan.C, hot_threshold=cfg.hot_threshold,
-        shards=cfg.salt_shards, self_join=True,
-        max_bucket=cfg.max_bucket, uids_a=encoded,
-        key_bits=cfg.hlsh_K, n_groups=plan.L, uids_hashed=True,
-    ).persist()
-    counts["candidate_pairs"] = cands.count()
-    t["candidates"] = time.time() - s
-
-    s = time.time()
-    matches = matched_pairs(cands, encoded, cfg.method, cfg.threshold, n_bits).persist()
-    counts["matched_pairs"] = matches.count()
-    t["match"] = time.time() - s
-
-    if cluster:
-        s = time.time()
-        clusters = expand_clusters(connected_components(matches), uid_to_rep)
-        counts["clusters"] = clusters.select("entity_id").distinct().count()
-        t["cluster"] = time.time() - s
-
+    else:
+        t.update(runner.timings)
+        counts.update(runner.counts)
+        if cluster:
+            s = time.time()
+            counts["clusters"] = res.clusters.select("entity_id").distinct().count()
+            t["cluster"] += time.time() - s
     t["total"] = time.time() - t0
     t["total_ex_generate"] = t["total"] - t["generate"]
-    for df in (records, encoded, keys, cands, matches, uid_to_rep):
-        df.unpersist()
+    records.unpersist()
+    res.release()
+    if runner is not None:
+        for df in runner.persisted:
+            df.unpersist()
+    plan = res.plan
     return {"timings": t, "counts": counts, "plan": {"C": plan.C, "L": plan.L}}
 
 
@@ -300,9 +272,10 @@ def run_scaling_probe() -> dict:
     - Input is generated ONCE at full parallelism and written to parquet;
       every measured config reads the identical bytes (load excluded from
       the work metric, as input synthesis was before).
-    - fused=True: the chain materializes with ONE action like a real
-      spark-submit job — the staged mode's per-stage count() barriers are
-      parallelism-independent driver overhead that caps the ratio.
+    - fused=True, the library's no-runner path: the chain materializes
+      with ONE action like a real spark-submit job — the staged mode's
+      per-stage count() barriers are parallelism-independent driver
+      overhead that caps the ratio.
     - INTERLEAVED reps (small, big, small, big, ...) after a JIT warm-up so
       slow host drift (this VM swings 2-7x on identical code) hits both
       configs equally; best-of-reps is the least-contaminated estimate.

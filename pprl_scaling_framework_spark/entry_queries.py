@@ -90,7 +90,7 @@ def _pair_collisions(d: DataFrame) -> DataFrame:
     met = bucket_join.salted_pair_candidates(
         k, ["key"], id_col="id", hot_threshold=256, shards=32, dedup=False,
         max_bucket=_ANALOG_MAX_BUCKET,
-        spread=max(d.sparkSession.sparkContext.defaultParallelism, 8),
+        spread=bucket_join.spread_width(d),
     )
     return met.groupBy("id_a", "id_b").agg(F.count("*").alias("collisions"))
 
@@ -191,7 +191,7 @@ def q_blocking_join(spark, sf_dir):
     return bucket_join.salted_pair_candidates(
         k, ["bkey"], id_col="id", hot_threshold=256, shards=32,
         dedup=False, keep_bucket_cols=True, max_bucket=_ANALOG_MAX_BUCKET,
-        spread=max(d.sparkSession.sparkContext.defaultParallelism, 8),
+        spread=bucket_join.spread_width(d),
     ).select("id_a", "id_b", "bkey")
 
 
@@ -220,7 +220,7 @@ def q_agreement_histogram(spark, sf_dir):
         base, ["lang", "szb"], id_col="id", payload_cols=("source", "n_chars"),
         hot_threshold=256, shards=32, dedup=False,
         max_bucket=_ANALOG_MAX_BUCKET,
-        spread=max(d.sparkSession.sparkContext.defaultParallelism, 8),
+        spread=bucket_join.spread_width(d),
     )
     vec = (
         F.when(F.col("source_a") == F.col("source_b"), 1).otherwise(0)

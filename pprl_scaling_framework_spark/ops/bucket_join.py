@@ -20,8 +20,6 @@ worthless and quadratic).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -94,6 +92,12 @@ def release_persists(blocking: bool = False) -> int:
     return n
 
 
+def spread_width(df: DataFrame) -> int:
+    """Partitions to round-robin a small input into before a quadratic or
+    per-row-heavy stage: the session's default parallelism, at least 8."""
+    return max(df.sparkSession.sparkContext.defaultParallelism, 8)
+
+
 def salted_sides(
     keys_a: DataFrame,
     keys_b: DataFrame,
@@ -102,7 +106,6 @@ def salted_sides(
     hot_threshold: int,
     shards: int,
     max_bucket: int | None = None,
-    materialize_hot: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Attach ``salt`` columns for a skew-safe join on ``bucket_cols + salt``.
 
@@ -118,13 +121,13 @@ def salted_sides(
       still meets exactly once per bucket, counts unchanged;
     - ``sz <= hot_threshold``: salt 0.
 
-    ``materialize_hot`` (default): the hot tail is persisted + counted once,
-    and BROADCAST into both tag joins when measured small (the overwhelmingly
-    common case — it is bounded by ``rows / hot_threshold`` and is usually a
-    few thousand rows). Without it, with AQE disabled or cost-based stats
-    unavailable, Catalyst shuffle-joins the FULL key set against the sizes
-    aggregate TWICE (once per side) — measured as ~30% of the candidates
-    stage at 10M keys. A measured-large hot tail (pathological skew) stays a
+    The hot tail is persisted + counted once, and BROADCAST into both tag
+    joins when measured small (the overwhelmingly common case — it is
+    bounded by ``rows / hot_threshold`` and is usually a few thousand rows).
+    Without that, with AQE disabled or cost-based stats unavailable,
+    Catalyst shuffle-joins the FULL key set against the sizes aggregate
+    TWICE (once per side) — measured as ~30% of the candidates stage at 10M
+    keys. A measured-large hot tail (pathological skew) stays a
     persisted shuffle join: never a driver-built broadcast of an unbounded
     table. Tiering is exact either way — salting/caps never guess.
     """
@@ -141,15 +144,9 @@ def salted_sides(
         *bucket_cols, n_shards.alias("_ns"),
         (F.col("_bs") > max_bucket if max_bucket is not None else F.lit(False)).alias("_mega"),
     )
-    if materialize_hot is None:
-        # default on; PPRL_MATERIALIZE_HOT=0 flips the fleet for A/B runs —
-        # the trade is one extra action (the count) + a driver-built
-        # broadcast vs two full-key-set shuffle joins against the sizes agg
-        materialize_hot = os.environ.get("PPRL_MATERIALIZE_HOT", "1") != "0"
-    if materialize_hot:
-        flagged = track_persist(flagged)
-        if flagged.count() <= HOT_BROADCAST_MAX_ROWS:
-            flagged = F.broadcast(flagged)
+    flagged = track_persist(flagged)
+    if flagged.count() <= HOT_BROADCAST_MAX_ROWS:
+        flagged = F.broadcast(flagged)
     a = (
         keys_a.join(flagged, bucket_cols, "left")
         .filter(F.col("_mega").isNull() | ~F.col("_mega"))
@@ -186,7 +183,6 @@ def salted_pair_candidates(
     max_bucket: int | None = None,
     dedup: bool = True,
     keep_bucket_cols: bool = False,
-    materialize_hot: bool | None = None,
     spread: int | None = None,
 ) -> DataFrame:
     """-> distinct (id_a, id_b[, <payload>_a, <payload>_b]) with id_a < id_b.
@@ -208,13 +204,13 @@ def salted_pair_candidates(
     streamed side, the whole quadratic pair fan-out runs in a single task
     (measured: 2.6 s serial of a 4.7 s query). The shuffle moved is the tiny
     keyed table; the fan-out then parallelizes. Callers whose input is
-    already well-partitioned should leave it None.
+    already well-partitioned should leave it None; :func:`spread_width`
+    is the width the operators pick.
     """
     if spread is not None:
         keyed = keyed.repartition(spread)
     a, b = salted_sides(
         keyed, keyed, bucket_cols, id_col, hot_threshold, shards, max_bucket,
-        materialize_hot=materialize_hot,
     )
     sel_a = [F.col(f"a.{id_col}").alias("id_a")] + [
         F.col(f"a.{c}").alias(f"{c}_a") for c in payload_cols

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .bucket_join import salted_pair_candidates, track_persist
+from .bucket_join import salted_pair_candidates, spread_width, track_persist
 
 MERSENNE31 = (1 << 31) - 1  # universal-hash modulus
 
@@ -198,7 +198,7 @@ def minhash_lsh_pairs(
     # PERSISTED: five downstream branches consume it (bucket sizing, both
     # salted join sides, both gram re-attach joins) and would otherwise
     # re-shingle the corpus once each.
-    spread = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    spread = spread_width(df)
     base = df.repartition(spread).select(
         F.col(id_col).alias("id"),
         gram_hashes(char_shingles(text_col, q)).alias("hg"),
@@ -269,7 +269,7 @@ def ngram_jaccard_pairs(
     """
     # persisted + spread for the same reasons as minhash_lsh_pairs: five
     # consumers, and AQE under-parallelizes the array-attach/verify stage
-    spread = max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    spread = spread_width(df)
     base = df.repartition(spread).select(
         F.col(id_col).alias("id"),
         F.col(block_col).alias("block"),

@@ -60,7 +60,9 @@ def brute_force_topk(
     # would run serially in one task; spread the corpus first (the shuffle
     # moved is just the corpus rows, the scoring then parallelizes). Only
     # widen: never repartition DOWN a corpus that is already spread.
-    spread = max(corpus.sparkSession.sparkContext.defaultParallelism, 8)
+    from .bucket_join import spread_width
+
+    spread = spread_width(corpus)
     if c.rdd.getNumPartitions() < spread:
         c = c.repartition(spread)
     scored = (

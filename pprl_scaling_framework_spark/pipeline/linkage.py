@@ -11,7 +11,7 @@ salting covers the skew case the reference never handled.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,9 +47,7 @@ class LinkageConfig:
         p = plan_blocking(theta=theta, s_bits=self.encoding.total_bits,
                           delta=self.delta, K=self.hlsh_K)
         if self.C is not None or self.L is not None:
-            p = FPSPlan(C=self.C or p.C, L=self.L or p.L, L_opt=p.L_opt,
-                        L_max=p.L_max, p_theta=p.p_theta, p_theta_k=p.p_theta_k,
-                        delta=p.delta, K=p.K, theta=p.theta, S=p.S)
+            p = replace(p, C=self.C or p.C, L=self.L or p.L)
         return p
 
 
@@ -83,7 +81,8 @@ def collapse_exact_duplicates(
     candidate pairs through every blocking group (the reference has no
     defense against this). Returns ``(representatives, uid_to_rep)`` where
     representatives carry one row per distinct content digest (min uid wins)
-    and ``uid_to_rep`` maps every uid to its representative.
+    and ``uid_to_rep`` maps every uid to its representative. A record whose
+    content is NULL has no digest and represents itself.
 
     When the input already carries the stage-0 ``sha256`` column
     (``sources.repos.with_uid_and_sha`` defines it as exactly
@@ -98,7 +97,10 @@ def collapse_exact_duplicates(
         F.col(uid_col).alias("uid"), digest.alias("_digest")
     )
     reps = digests.groupBy("_digest").agg(F.min("uid").alias("rep_uid"))
-    uid_to_rep = digests.join(reps, "_digest").select("uid", "rep_uid")
+    # sha2(NULL) is NULL and a NULL key joins nothing: a record without
+    # content is its own representative
+    uid_to_rep = digests.join(reps, "_digest", "left").select(
+        "uid", F.coalesce("rep_uid", "uid").alias("rep_uid"))
     rep_keys = (
         uid_to_rep.filter(F.col("uid") == F.col("rep_uid"))
         .select(F.col("uid").alias("_rep_key"))
@@ -119,6 +121,61 @@ def expand_clusters(clusters_rep: DataFrame, uid_to_rep: DataFrame) -> DataFrame
     )
 
 
+def _stage(runner, tracked: list, name: str, build, reused: bool = False) -> DataFrame:
+    """The one hook every pipeline stage goes through.
+
+    With a runner (a ``StageRunner``, or any object with ``run(name,
+    build)``) the runner owns the stage. Without one nothing is
+    materialized, so an output read by more than one consumer (``reused``)
+    is persisted into ``tracked``; otherwise each consumer re-runs the
+    stage's Python UDF (a plan audit once showed 40 ArrowEvalPython nodes).
+    """
+    if runner is not None:
+        return runner.run(name, build)
+    df = build()
+    return track_persist(df, tracked) if reused else df
+
+
+def _link(sides: dict, config: LinkageConfig, uid_col: str, runner, tracked: list):
+    """The encode -> block -> candidates -> match chain, written once.
+
+    ``sides`` maps a stage-name suffix to ``(records, encoding)``: one side
+    ``""`` is a self-join (dedup; stages ``encode`` and ``block``), sides
+    ``"_a"`` and ``"_b"`` a two-party linkage (``encode_a`` ... ``block_b``).
+    Returns ``(plan, encoded, keys, candidates, matches)`` with ``encoded``
+    and ``keys`` listed per side.
+    """
+    plan = config.plan()
+    n_bits = config.encoding.total_bits
+    pos = hlsh.position_matrix(plan.L, config.hlsh_K, n_bits, config.hlsh_seed)
+    # each build runs inside _stage before the loop moves on, so every
+    # closure sees its own side
+    encoded = [
+        _stage(runner, tracked, "encode" + suffix, lambda: encode_dataframe(
+            records, enc, included=[uid_col]), reused=True)
+        for suffix, (records, enc) in sides.items()
+    ]
+    # hash_uid: the exploded key set carries the 8-byte xxhash64 surrogate
+    # instead of the uid string; key_bits/n_groups pack (group_id, key) into
+    # one long downstream — both shrink every candidates-stage shuffle row.
+    # The keys feed the bucket-size aggregate and both sides of the join.
+    keys = [
+        _stage(runner, tracked, "block" + suffix, lambda: hlsh.blocking_keys(
+            enc_df, uid_col, "bf", pos, n_bits, hash_uid=True), reused=True)
+        for suffix, enc_df in zip(sides, encoded)
+    ]
+    self_join = len(sides) == 1
+    keys_b, enc_b = (None, None) if self_join else (keys[1], encoded[1])
+    cands = _stage(runner, tracked, "candidates", lambda: fps.candidate_pairs(
+        keys[0], keys_b, C=plan.C, hot_threshold=config.hot_threshold,
+        shards=config.salt_shards, self_join=self_join,
+        max_bucket=config.max_bucket, uids_a=encoded[0], uids_b=enc_b,
+        key_bits=config.hlsh_K, n_groups=plan.L, uids_hashed=True))
+    matches = _stage(runner, tracked, "match", lambda: _matched_pairs(
+        cands, encoded[0], config.method, config.threshold, n_bits, encoded_b=enc_b))
+    return plan, encoded, keys, cands, matches
+
+
 def run_dedup_pipeline(
     spark: SparkSession,
     records: DataFrame,
@@ -136,48 +193,20 @@ def run_dedup_pipeline(
     removing the quadratic blow-up of exact-duplicate groups — and cluster
     ids are re-expanded to all members afterwards.
     """
-    plan = config.plan()
-    n_bits = config.encoding.total_bits
-    pos = hlsh.position_matrix(plan.L, config.hlsh_K, n_bits, config.hlsh_seed)
     tracked: list = []
-
-    def stage(name, build, reused: bool = False):
-        # without a StageRunner nothing is materialized — persist DFs that
-        # multiple downstream branches consume, or the encode UDF re-runs
-        # once per branch (plan audit showed 40 ArrowEvalPython nodes)
-        if runner is not None:
-            return runner.run(name, build)
-        df = build()
-        return track_persist(df, tracked) if reused else df
-
     uid_to_rep = None
     if collapse_exact:
-        rep_records, uid_to_rep = collapse_exact_duplicates(records, uid_col, content_col)
-        if runner is not None:
-            uid_to_rep = runner.run("exact_collapse", lambda: uid_to_rep)
-        records = rep_records
-
-    encoded = stage("encode", lambda: encode_dataframe(
-        records, config.encoding, included=[uid_col]), reused=True)
-    # hash_uid: the exploded key set carries the 8-byte xxhash64 surrogate
-    # instead of the uid string; key_bits/n_groups pack (group_id, key) into
-    # one long downstream — both shrink every candidates-stage shuffle row
-    keys = stage("block", lambda: hlsh.blocking_keys(
-        encoded, uid_col, "bf", pos, n_bits, hash_uid=True))
-    cands = stage("candidates", lambda: fps.candidate_pairs(
-        keys, None, C=plan.C, hot_threshold=config.hot_threshold,
-        shards=config.salt_shards, self_join=True,
-        max_bucket=config.max_bucket, uids_a=encoded,
-        key_bits=config.hlsh_K, n_groups=plan.L, uids_hashed=True))
-    matches = stage("match", lambda: _matched_pairs(
-        cands, encoded, config.method, config.threshold, n_bits))
+        records, collapsed = collapse_exact_duplicates(records, uid_col, content_col)
+        uid_to_rep = _stage(runner, tracked, "exact_collapse", lambda: collapsed)
+    plan, encoded, keys, cands, matches = _link(
+        {"": (records, config.encoding)}, config, uid_col, runner, tracked)
     clusters = None
     if cluster:
-        clusters = stage("cluster", lambda: connected_components(matches))
+        clusters = _stage(runner, tracked, "cluster", lambda: connected_components(matches))
         if collapse_exact:
-            clusters = stage("cluster_expand",
-                             lambda: expand_clusters(clusters, uid_to_rep))
-    return LinkageResult(plan, encoded, keys, cands, matches, clusters,
+            clusters = _stage(runner, tracked, "cluster_expand",
+                              lambda: expand_clusters(clusters, uid_to_rep))
+    return LinkageResult(plan, encoded[0], keys[0], cands, matches, clusters,
                          uid_to_rep, tracked=tracked)
 
 
@@ -199,33 +228,11 @@ def run_linkage_pipeline(
     enc_cfg_b = config_b or config_a.encoding
     if not config_a.encoding.aligned_with(enc_cfg_b):
         raise ValueError("party encodings are not bit-layout aligned")
-    plan = config_a.plan()
-    n_bits = config_a.encoding.total_bits
-    pos = hlsh.position_matrix(plan.L, config_a.hlsh_K, n_bits, config_a.hlsh_seed)
     tracked: list = []
-
-    def stage(name, build, reused: bool = False):
-        if runner is not None:
-            return runner.run(name, build)
-        df = build()
-        return track_persist(df, tracked) if reused else df
-
-    enc_a = stage("encode_a", lambda: encode_dataframe(
-        records_a, config_a.encoding, included=[uid_col]), reused=True)
-    enc_b = stage("encode_b", lambda: encode_dataframe(
-        records_b, enc_cfg_b, included=[uid_col]), reused=True)
-    keys_a = stage("block_a", lambda: hlsh.blocking_keys(
-        enc_a, uid_col, "bf", pos, n_bits, hash_uid=True))
-    keys_b = stage("block_b", lambda: hlsh.blocking_keys(
-        enc_b, uid_col, "bf", pos, n_bits, hash_uid=True))
-    cands = stage("candidates", lambda: fps.candidate_pairs(
-        keys_a, keys_b, C=plan.C, hot_threshold=config_a.hot_threshold,
-        shards=config_a.salt_shards, max_bucket=config_a.max_bucket,
-        uids_a=enc_a, uids_b=enc_b,
-        key_bits=config_a.hlsh_K, n_groups=plan.L, uids_hashed=True))
-    matches = stage("match", lambda: _matched_pairs(
-        cands, enc_a, config_a.method, config_a.threshold, n_bits, encoded_b=enc_b))
-    return LinkageResult(plan, enc_a, keys_a, cands, matches, None, tracked=tracked)
+    plan, encoded, keys, cands, matches = _link(
+        {"_a": (records_a, config_a.encoding), "_b": (records_b, enc_cfg_b)},
+        config_a, uid_col, runner, tracked)
+    return LinkageResult(plan, encoded[0], keys[0], cands, matches, None, tracked=tracked)
 
 
 def pairwise_f1(predicted: DataFrame, truth: DataFrame) -> dict:

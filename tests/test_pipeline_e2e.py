@@ -224,3 +224,80 @@ def test_pipeline_scoped_release(spark, records):
     assert res2.release() >= 1
     assert res2.tracked == []
     bucket_join.release_persists()
+
+
+def _edge_input(spark, records, kind):
+    schema = "uid string, content string"
+    if kind == "empty":
+        return spark.createDataFrame([], schema)
+    if kind == "one":
+        return spark.createDataFrame([("u0", "def f(): return 1")], schema)
+    if kind == "identical":
+        return spark.createDataFrame(
+            [(f"u{i}", "import os import sys " * 5) for i in range(6)], schema)
+    if kind == "null":
+        return spark.createDataFrame([(f"null-{i}", None) for i in range(3)], schema)
+    # non-ASCII rows appended to real ones
+    odd = ["naïve café — déjà vu", "日本語のテキスト 😀", "Ω≈ç√∫ µ≤≥÷ ﬁ ß",
+           "é́ z​w"]
+    return records.select("uid", "content").limit(4).unionByName(
+        spark.createDataFrame([(f"x{i}", t) for i, t in enumerate(odd)], schema))
+
+
+@pytest.mark.parametrize("kind", ["empty", "one", "identical", "null", "non_ascii"])
+def test_pipeline_edge_inputs(spark, records, tmp_path, kind):
+    """Empty, single-record, all-identical, null and non-ASCII inputs run
+    through dedup and two-party linkage; dedup clusters every input uid
+    exactly once. sha2(NULL) is NULL, so a record without content has no
+    digest: the exact collapse keeps it as its own representative."""
+    from pprl_scaling_framework_spark.pipeline.stages import StageRunner
+
+    inp = _edge_input(spark, records, kind)
+    uids = sorted(r["uid"] for r in inp.collect())
+    runners = [None, StageRunner(spark, str(tmp_path))] if kind == "empty" else [None]
+    for runner in runners:
+        res = run_dedup_pipeline(spark, inp, CFG, runner=runner)
+        rows = res.clusters.collect()
+        assert sorted(r["uid"] for r in rows) == uids
+        if kind == "identical":
+            assert len({r["entity_id"] for r in rows}) == 1
+        if kind == "null":
+            entity = {r["uid"]: r["entity_id"] for r in rows}
+            assert all(entity[f"null-{i}"] == f"null-{i}" for i in range(3))
+        res.release()
+    party_b = records.select("uid", "content").limit(12)
+    res = run_linkage_pipeline(spark, inp, party_b, CFG)
+    assert res.matched_pairs.count() <= len(uids) * 12
+    res.release()
+
+
+def test_dedup_persists_multi_consumer_stages(spark, records):
+    """Without a runner, the encode and block outputs (each read by more
+    than one consumer) are cached, so their Python UDFs run once."""
+    res = run_dedup_pipeline(spark, records, CFG, cluster=False)
+    assert res.encoded.is_cached
+    assert res.blocking_keys.is_cached
+    res.release()
+
+
+def test_bench_run_pipeline_contract(spark):
+    """bench.run_pipeline keeps its timings/counts keys in both modes, and
+    its matched-pair count is the library pipeline's."""
+    import bench
+
+    staged = bench.run_pipeline(spark, 100)
+    assert list(staged["timings"]) == [
+        "generate", "exact_collapse", "encode", "block", "candidates", "match",
+        "cluster", "total", "total_ex_generate"]
+    assert list(staged["counts"]) == [
+        "records", "rep_records", "blocking_keys", "candidate_pairs",
+        "matched_pairs", "clusters"]
+    fused = bench.run_pipeline(spark, 100, cluster=False, fused=True)
+    assert list(fused["timings"]) == ["generate", "work", "total", "total_ex_generate"]
+    assert list(fused["counts"]) == ["records", "matched_pairs"]
+    inp = repos_src.with_uid_and_sha(
+        repos_src.synth_repos(spark, n_entities=100, seed=42, skew_every=50))
+    res = run_dedup_pipeline(spark, inp, bench.bench_config(), cluster=False)
+    n = res.matched_pairs.count()
+    res.release()
+    assert staged["counts"]["matched_pairs"] == fused["counts"]["matched_pairs"] == n
