@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ops.bucket_join import salted_sides
+from ..ops.bucket_join import salted_pair_candidates
 
 
 def candidate_pairs(
@@ -109,26 +109,19 @@ def candidate_pairs(
         )
         return keys.select("uid", gk.alias("gk"))
 
-    ka = _packed(_rid_keys(keys_a))
-    # same OBJECT for a self-join: salted_sides sizes buckets on one side
-    # when `keys_a is keys_b` and on the union of both sides otherwise
-    kb = ka if self_join else _packed(_rid_keys(keys_b))
-
     # mega-buckets (> max_bucket) come from low-information key patterns
     # shared by thousands of records: they carry most of the join volume,
-    # while a true pair's C>=2 evidence comes from its small buckets
-    a, b = salted_sides(
-        ka, kb, bucket_cols, "uid", hot_threshold, shards, max_bucket
-    )
-    joined = a.alias("a").join(
-        b.alias("b"), [*bucket_cols, "salt"], "inner"
-    ).select(F.col("a.uid").alias("rid_a"), F.col("b.uid").alias("rid_b"))
-
-    if self_join:
-        joined = joined.filter(F.col("rid_a") < F.col("rid_b"))
-    # two-party: NO self-pair filter. GenerateIdPairsReducer emits every
-    # (a, b) cross-product pair — parties sharing an id space would lose
-    # exactly their true matches if equal-uid pairs were dropped.
+    # while a true pair's C>=2 evidence comes from its small buckets.
+    # A self-join keeps rid_a < rid_b; two-party keeps every (a, b) pair —
+    # GenerateIdPairsReducer emits the full cross product, and parties
+    # sharing an id space would lose exactly their true matches if equal-uid
+    # pairs were dropped. No dedup: the multiplicity IS the collision count.
+    joined = salted_pair_candidates(
+        _packed(_rid_keys(keys_a)), bucket_cols, "uid",
+        hot_threshold=hot_threshold, shards=shards, max_bucket=max_bucket,
+        dedup=False,
+        keyed_b=None if self_join else _packed(_rid_keys(keys_b)),
+    ).withColumnsRenamed({"id_a": "rid_a", "id_b": "rid_b"})
 
     counted = (
         joined.groupBy("rid_a", "rid_b")

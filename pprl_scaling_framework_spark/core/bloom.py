@@ -52,10 +52,6 @@ def popcount_rows(packed: np.ndarray) -> np.ndarray:
     return _POP8[packed].sum(axis=1, dtype=np.int64)
 
 
-def set_positions(bits_row: np.ndarray, positions: np.ndarray) -> None:
-    bits_row[positions] = 1
-
-
 def bf_from_grams(
     gram_indices_per_row: Sequence[np.ndarray],
     positions_matrix: np.ndarray,

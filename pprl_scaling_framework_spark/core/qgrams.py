@@ -18,7 +18,6 @@ they are unit-testable without a SparkSession.
 from __future__ import annotations
 
 import re
-from typing import Iterable, Sequence
 
 PAD = "_"
 # Java \s is ASCII-only ([ \t\n\x0B\f\r]); Python \s is Unicode-aware and
@@ -115,11 +114,3 @@ def qgram_count(value, q: int) -> int:
 def unique_qgram_count(value, q: int) -> int:
     return len(unique_qgrams(value, q))
 
-
-def qgram_set_union(values: Iterable, q: int) -> list[str]:
-    """Unique q-grams across several field values (CLK-style pooling)."""
-    seen: dict[str, None] = {}
-    for v in values:
-        for g in qgrams(v, q):
-            seen.setdefault(g)
-    return list(seen)

@@ -22,9 +22,6 @@ import numpy as np
 
 from .bloom import popcount_rows, unpack_bits
 
-SIMILARITY_METHODS = ("jaccard", "hamming", "dice")
-DEFAULT_METHOD = "jaccard"
-
 
 def hamming(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return popcount_rows(np.bitwise_xor(a, b))

@@ -197,12 +197,11 @@ def q_blocking_join(spark, sf_dir):
 
 def q_semi_join(spark, sf_dir):
     """F3: records participating in >= 1 frequent pair (left semi)."""
+    from .blocking.fps import semi_join_members
+
     d = _docs(spark, sf_dir)
     freq = q_frequent_pairs(spark, sf_dir)
-    ids = freq.select(F.col("id_a").alias("doc_id")).unionByName(
-        freq.select(F.col("id_b").alias("doc_id"))
-    ).distinct()
-    return d.join(ids, "doc_id", "left_semi").select("doc_id", "lang", "n_chars")
+    return semi_join_members(d, freq, "doc_id").select("doc_id", "lang", "n_chars")
 
 
 def q_agreement_histogram(spark, sf_dir):
@@ -518,18 +517,16 @@ def _pprl_enc_records(spark):
     return _pprl_records(spark).withColumn("content24", F.substring("content", 1, 24))
 
 
-def _fbf_dynamic_sizes_from_data(recs) -> list[int]:
+def _field_avg_qgrams(recs) -> list[float]:
     """D2: per-field average q-gram count (exact integer sums -> one IEEE
-    division) -> dynamic FBF sizing (FieldBloomFilterEncoding.java:318-348)."""
-    from .core import planner
-
+    division), the input of dynamic FBF sizing
+    (FieldBloomFilterEncoding.java:318-348)."""
     aggs = [F.count("*").alias("n")] + [
         F.sum(text.qgram_count_expr(f, _ENC_Q)).alias(f"g{i}")
         for i, f in enumerate(_PPRL_ENC_FIELDS)
     ]
     row = recs.agg(*aggs).collect()[0]
-    avgs = [row[f"g{i}"] / row["n"] for i in range(len(_PPRL_ENC_FIELDS))]
-    return planner.fbf_dynamic_sizes(avgs, _ENC_K)
+    return [row[f"g{i}"] / row["n"] for i in range(len(_PPRL_ENC_FIELDS))]
 
 
 def q_pprl_encode_fbf(spark, sf_dir):
@@ -539,10 +536,8 @@ def q_pprl_encode_fbf(spark, sf_dir):
     from .encoding.encode import encode_dataframe
 
     recs = _pprl_enc_records(spark)
-    cfg = schemes.EncodingConfig(
-        scheme="fbf", fields=_PPRL_ENC_FIELDS, K=_ENC_K, Q=_ENC_Q,
-        fbf_sizes=tuple(_fbf_dynamic_sizes_from_data(recs)),
-    )
+    cfg = schemes.fbf_dynamic(
+        list(_PPRL_ENC_FIELDS), _field_avg_qgrams(recs), K=_ENC_K, Q=_ENC_Q)
     enc = encode_dataframe(recs, cfg, included=["uid"])
     return enc.select("uid", F.sha2(F.hex(F.col("bf")), 256).alias("bf_digest"))
 
@@ -551,12 +546,13 @@ def q_pprl_encode_rbf(spark, sf_dir):
     """X10/D3: weighted RBF — seeded per-field bit sampling through a seeded
     permutation (RowBloomFilterEncoding.java:296-329,352-388; weighted size
     :398-405)."""
+    from .core import planner
     from .encoding import schemes
     from .encoding.encode import encode_dataframe
 
     recs = _pprl_enc_records(spark)
     cfg = schemes.rbf_weighted(
-        list(_PPRL_ENC_FIELDS), _fbf_dynamic_sizes_from_data(recs),
+        list(_PPRL_ENC_FIELDS), planner.fbf_dynamic_sizes(_field_avg_qgrams(recs), _ENC_K),
         list(_RBF_WEIGHTS), K=_ENC_K, Q=_ENC_Q,
         permutation_seed=_RBF_PERM_SEED,
         selection_seeds=list(_RBF_SELECTION_SEEDS),
@@ -586,12 +582,13 @@ def q_pprl_encode_rbf_uniform(spark, sf_dir):
     dynamically-sized per-field filters; rbf_n = sum(fbf_sizes). Leftover
     permutation slots beyond sum(composition) stay 0 — same no-redistribution
     layout the weighted gate proves."""
+    from .core import planner
     from .encoding import schemes
     from .encoding.encode import encode_dataframe
 
     recs = _pprl_enc_records(spark)
     cfg = schemes.rbf_uniform(
-        list(_PPRL_ENC_FIELDS), _fbf_dynamic_sizes_from_data(recs),
+        list(_PPRL_ENC_FIELDS), planner.fbf_dynamic_sizes(_field_avg_qgrams(recs), _ENC_K),
         K=_ENC_K, Q=_ENC_Q, permutation_seed=_RBF_PERM_SEED,
         selection_seeds=list(_RBF_SELECTION_SEEDS),
     )

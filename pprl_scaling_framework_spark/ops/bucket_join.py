@@ -1,10 +1,11 @@
 """Skew-safe bucketed joins for candidate-pair generation.
 
-Shared by the PPRL FPS blocking path (``blocking/fps``) and the LSH
-dedup/similarity operators (minhash bands, simhash bands, hyperplane
-buckets, explicit blocks): one degenerate bucket — empty documents,
-boilerplate headers, zero vectors, low-entropy blocking keys — otherwise
-lands in a single shuffle task and goes quadratic there.
+:func:`salted_pair_candidates` is the one salted pair join, shared by the
+PPRL FPS blocking path (``blocking/fps``), the LSH dedup/similarity
+operators (minhash bands, simhash bands, hyperplane buckets, explicit
+blocks) and the ANN top-k shuffle path: one degenerate bucket — empty
+documents, boilerplate headers, zero vectors, low-entropy blocking keys —
+otherwise lands in a single shuffle task and goes quadratic there.
 
 Salting is pair-set-invariant: the A side of a hot bucket is sharded
 deterministically by ``xxhash64(id) % n_shards``; the B side is replicated
@@ -184,12 +185,19 @@ def salted_pair_candidates(
     dedup: bool = True,
     keep_bucket_cols: bool = False,
     spread: int | None = None,
+    keyed_b: DataFrame | None = None,
 ) -> DataFrame:
     """-> distinct (id_a, id_b[, <payload>_a, <payload>_b]) with id_a < id_b.
 
     ``keyed``: one row per (bucket, member) with columns ``bucket_cols`` +
     ``id_col`` + ``payload_cols``. Keep payloads to cheap scalars (e.g. a
     simhash long); heavy arrays should be re-attached AFTER the distinct.
+
+    ``keyed_b``: a second, same-shaped side for a two-sided join (two-party
+    FPS, ANN corpus x queries): ``id_a`` comes from ``keyed`` (sharded on
+    hot buckets), ``id_b`` from ``keyed_b`` (replicated), bucket sizes are
+    taken over the union of both sides, and there is NO id filter — equal
+    ids on the two sides are a legitimate pair.
 
     ``dedup=False`` skips the final distinct — correct (and one shuffle
     cheaper) when each id appears in exactly ONE bucket (explicit blocks,
@@ -205,12 +213,13 @@ def salted_pair_candidates(
     (measured: 2.6 s serial of a 4.7 s query). The shuffle moved is the tiny
     keyed table; the fan-out then parallelizes. Callers whose input is
     already well-partitioned should leave it None; :func:`spread_width`
-    is the width the operators pick.
+    is the width the operators pick. Only ``keyed`` is spread.
     """
     if spread is not None:
         keyed = keyed.repartition(spread)
     a, b = salted_sides(
-        keyed, keyed, bucket_cols, id_col, hot_threshold, shards, max_bucket,
+        keyed, keyed if keyed_b is None else keyed_b, bucket_cols, id_col,
+        hot_threshold, shards, max_bucket,
     )
     sel_a = [F.col(f"a.{id_col}").alias("id_a")] + [
         F.col(f"a.{c}").alias(f"{c}_a") for c in payload_cols
@@ -220,10 +229,8 @@ def salted_pair_candidates(
     ]
     if keep_bucket_cols:
         sel_a += [F.col(f"a.{c}") for c in bucket_cols]
-    out = (
-        a.alias("a")
-        .join(b.alias("b"), [*bucket_cols, "salt"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(*sel_a, *sel_b)
-    )
+    out = a.alias("a").join(b.alias("b"), [*bucket_cols, "salt"])
+    if keyed_b is None:
+        out = out.filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    out = out.select(*sel_a, *sel_b)
     return out.distinct() if dedup else out

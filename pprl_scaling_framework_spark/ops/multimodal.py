@@ -14,7 +14,6 @@ Codec layer (no external media libraries needed):
   parser's sibling): frame sampling + per-frame intensity via
   :func:`decode_video`, golden-tested against an independent parser
   (``media_video`` driver query).
-- The 16-byte 'FAKE' synthetic header remains as the plumbing-test format.
 
 Undecodable payloads raise by default (``on_undecodable='error'``) — silent
 row drops are data loss; pass ``'skip'`` explicitly for lossy ingest.
@@ -48,24 +47,6 @@ MEDIA_SCHEMA = StructType([
         StructField("duration_ms", IntegerType()),
     ])),
 ])
-
-_MAGIC = b"FAKE"
-
-
-def make_fake_media(spark: SparkSession, n: int = 100, seed: int = 42) -> DataFrame:
-    """Deterministic synthetic media table matching MEDIA_SCHEMA."""
-    rows = []
-    for i in range(n):
-        w = 8 + (i * 7 + seed) % 24
-        h = 8 + (i * 13 + seed) % 24
-        c = 1 + i % 3
-        payload = _MAGIC + struct.pack("<III", w, h, c) + bytes(
-            (i * 31 + j * 7 + seed) % 256 for j in range(w * h * c)
-        )
-        rows.append((i, "image", "image/fake", payload,
-                     {"width": w, "height": h, "channels": c, "duration_ms": None}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
 
 DECODED_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -272,27 +253,22 @@ def decode_avi(data: bytes) -> tuple[int, int, int, list[np.ndarray]] | None:
 def decode_pixels(data: bytes) -> tuple[int, int, int, np.ndarray] | None:
     """(width, height, channels, flat uint8 pixels) or None.
 
-    Codec chain: FAKE synthetic header -> PPM (P6) -> BMP (24-bit).
+    Codec chain: PPM (P6) -> BMP (24-bit).
     """
-    if data[:4] == _MAGIC:
-        w, h, c = struct.unpack("<III", data[4:16])
-        return w, h, c, np.frombuffer(data[16:16 + w * h * c], dtype=np.uint8)
     return decode_ppm(data) or decode_bmp(data)
 
 
 def decode_image(
     df: DataFrame,
-    fake: bool = False,  # kept for API compatibility; FAKE is always handled
     feature_bins: int = 8,
     on_undecodable: str = "error",
 ) -> DataFrame:
     """Decode + feature-extract via mapInPandas (Arrow-batched).
 
-    PPM/BMP/FAKE decode with the built-in pure-Python codecs on any executor.
+    PPM/BMP decode with the built-in pure-Python codecs on any executor.
     A payload no codec accepts raises (default) — silent row drops are data
     loss — or is skipped with ``on_undecodable='skip'``.
     """
-    del fake
     if on_undecodable not in ("error", "skip"):
         raise ValueError("on_undecodable must be 'error' or 'skip'")
     strict = on_undecodable == "error"
@@ -548,9 +524,8 @@ def resize_image(
     """Real nearest-neighbor resize via mapInPandas (no external libs).
 
     Decodes with the same codec chain as :func:`decode_image`, resamples by
-    integer index mapping, re-encodes: FAKE stays FAKE, anything 3-channel
-    becomes PPM (the canonical uncompressed output), other channel counts
-    stay FAKE-framed.
+    integer index mapping, re-encodes as PPM (the canonical uncompressed
+    output; every decodable image is 3-channel).
     """
     if on_undecodable not in ("error", "skip"):
         raise ValueError("on_undecodable must be 'error' or 'skip'")
@@ -564,8 +539,7 @@ def resize_image(
             datas = []
             metas = []
             for k, (data, mid) in enumerate(zip(pdf["data"], pdf["media_id"])):
-                raw = bytes(data)
-                decoded = decode_pixels(raw)
+                decoded = decode_pixels(bytes(data))
                 if decoded is None:
                     if strict:
                         raise ValueError(
@@ -578,12 +552,8 @@ def resize_image(
                 yi = (np.arange(th) * h) // th
                 xi = (np.arange(tw) * w) // tw
                 out = grid[yi][:, xi].ravel()
-                if raw[:4] == _MAGIC or c != 3:
-                    new = _MAGIC + struct.pack("<III", tw, th, c) + out.tobytes()
-                else:
-                    new = encode_ppm(tw, th, out)
                 keep.append(k)
-                datas.append(new)
+                datas.append(encode_ppm(tw, th, out))
                 metas.append({"width": tw, "height": th, "channels": c,
                               "duration_ms": None})
             pdf = pdf.iloc[keep].assign(data=datas, meta=metas)

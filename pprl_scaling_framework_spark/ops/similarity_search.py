@@ -18,6 +18,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .bucket_join import salted_pair_candidates, spread_width, track_persist
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -60,8 +62,6 @@ def brute_force_topk(
     # would run serially in one task; spread the corpus first (the shuffle
     # moved is just the corpus rows, the scoring then parallelizes). Only
     # widen: never repartition DOWN a corpus that is already spread.
-    from .bucket_join import spread_width
-
     spread = spread_width(corpus)
     if c.rdd.getNumPartitions() < spread:
         c = c.repartition(spread)
@@ -116,6 +116,60 @@ def hyperplane_signature(vec: Column, dim: int, n_planes: int, seed: int = 11) -
 QUERY_BROADCAST_MAX_ROWS = 100_000
 
 
+def _bucket_topk(c: DataFrame, q: DataFrame, key: str, corpus: DataFrame,
+                 queries: DataFrame, id_col: str, vec_col: str, k: int,
+                 q_rows: int | None, query_broadcast_max: int,
+                 hot_threshold: int, shards: int) -> DataFrame:
+    """Shared ANN rescore tail: candidates share ``key`` (a hyperplane bucket
+    or an IVF cell), scored by exact cosine, ranked top-k per query.
+
+    ``c``: (neighbor_id, c_vec, key); ``q``: (query_id, q_vec, key), one
+    row per probed key. ``q_rows``: the row count of ``q`` if known; else
+    (with ``query_broadcast_max > 0``) ``q`` is persisted (tracked — see
+    :func:`ops.bucket_join.release_persists`) and counted once.
+
+    - ``q_rows <= query_broadcast_max``: ``q`` is broadcast into the key
+      join — one corpus pass, no shuffle;
+    - otherwise ids only go through the salted shuffle join (corpus side
+      sharded on hot keys, query side replicated), and vectors re-attach
+      from the RAW ``corpus``/``queries``: joining ``c``/``q`` would
+      re-execute the key assignment (for IVF a second corpus pass through
+      the centroid BroadcastNestedLoopJoin), and an IVF ``q`` carries
+      ``n_probe`` copies of each query vector.
+
+    A corpus row has one key and a query's keys are distinct, so every
+    (query, neighbor) pair meets at most once — no dedup.
+    """
+    if q_rows is None and query_broadcast_max > 0:
+        q = track_persist(q)
+        q_rows = q.count()
+
+    if q_rows is not None and q_rows <= query_broadcast_max:
+        scored = c.join(F.broadcast(q), key)
+    else:
+        pair_ids = salted_pair_candidates(
+            c.select(key, F.col("neighbor_id").alias("id")), [key],
+            hot_threshold=hot_threshold, shards=shards, dedup=False,
+            keyed_b=q.select(key, F.col("query_id").alias("id")),
+        ).select(F.col("id_a").alias("neighbor_id"), F.col("id_b").alias("query_id"))
+        scored = (
+            pair_ids
+            .join(corpus.select(F.col(id_col).alias("neighbor_id"),
+                                F.col(vec_col).alias("c_vec")), "neighbor_id")
+            .join(queries.select(F.col(id_col).alias("query_id"),
+                                 F.col(vec_col).alias("q_vec")), "query_id")
+        )
+    scored = scored.filter(F.col("neighbor_id") != F.col("query_id")).withColumn(
+        "cosine_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6)
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine_sim")
+    )
+
+
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -132,23 +186,16 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: candidates share the query's hyperplane bucket.
 
-    Two physical paths, identical output:
-
-    - measured-small query set (``<= query_broadcast_max`` rows): queries are
-      broadcast into the bucket join — one corpus pass, no shuffle;
-    - large query set: both sides are keyed by bucket and joined through the
-      SALTED shuffle machinery (``ops.bucket_join.salted_sides`` — corpus
-      side sharded on hot buckets, query side replicated across shards, every
-      co-bucket pair meets exactly once), ids-only through the join with
-      vectors re-attached for the exact rescore. This is the 100 TB path: the
-      query batch partitions like any other table and is never collected.
+    Two physical paths, identical output (:func:`_bucket_topk`): a
+    measured-small query set (``<= query_broadcast_max`` rows) is broadcast
+    into the bucket join; a larger one goes ids-only through the salted
+    shuffle join — the 100 TB path, where the query batch partitions like
+    any other table and is never collected.
 
     ``query_count``: the query-set row count if the caller knows it (keeps
-    the operator fully lazy). ``query_broadcast_max <= 0`` forces the shuffle
-    path with NO count at all. When the size is genuinely unknown, the
-    signature-augmented query side is persisted (tracked — release with
-    :func:`ops.bucket_join.release_persists`) and counted ONCE; both physical
-    paths then reuse the cached signatures, so the query lineage executes
+    the operator fully lazy). ``query_broadcast_max <= 0`` forces the
+    shuffle path with NO count at all. Otherwise the signature-augmented
+    query side is persisted and counted ONCE, so the query lineage executes
     exactly one time per call.
     """
     sig = lambda col: hyperplane_signature(col, dim, n_planes, seed)
@@ -159,51 +206,9 @@ def lsh_topk(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     ).withColumn("bucket", sig(F.col("q_vec")))
 
-    if query_count is None and query_broadcast_max > 0:
-        from .bucket_join import track_persist
-
-        q = track_persist(q)
-        query_count = q.count()
-
-    if query_count is not None and query_count <= query_broadcast_max:
-        scored = (
-            c.join(F.broadcast(q), "bucket")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("cosine_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
-        )
-    else:
-        from .bucket_join import salted_sides
-
-        ca = c.select("bucket", F.col("neighbor_id").alias("id"))
-        qa = q.select("bucket", F.col("query_id").alias("id"))
-        side_c, side_q = salted_sides(
-            ca, qa, ["bucket"], "id", hot_threshold, shards
-        )
-        pair_ids = (
-            side_c.alias("c").join(side_q.alias("q"), ["bucket", "salt"])
-            .select(
-                F.col("c.id").alias("neighbor_id"),
-                F.col("q.id").alias("query_id"),
-            )
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-        )
-        # re-attach vectors from the RAW corpus, not the signature-augmented
-        # plan `c`: joining `c` re-executes the bucket-assignment lineage
-        # (the signature column is pruned, but the scan+compute subtree is
-        # not shared) when its only purpose on this branch was bucketing
-        scored = (
-            pair_ids
-            .join(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                F.col(vec_col).alias("c_vec")), "neighbor_id")
-            .join(queries.select(F.col(id_col).alias("query_id"),
-                                 F.col(vec_col).alias("q_vec")), "query_id")
-            .withColumn("cosine_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine_sim")
+    return _bucket_topk(
+        c, q, "bucket", corpus, queries, id_col, vec_col, k, query_count,
+        query_broadcast_max, hot_threshold, shards,
     )
 
 
@@ -224,8 +229,6 @@ def embedding_near_duplicates(
     vectors all landing in one sign pattern) and carries ids only; vectors
     re-attach for the exact rescore after the pair set is canonical.
     """
-    from .bucket_join import salted_pair_candidates
-
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).withColumn(
         "bucket", hyperplane_signature(F.col("vec"), dim, n_planes, seed)
     )
@@ -314,11 +317,10 @@ def ivf_topk(
       zero shuffle, whole-stage codegen, O(n_cells * dim) per row. (For the
       >10^5-centroid regimes real IVF systems shard the coarse quantizer
       hierarchically; this operator targets the <=10^4-cell sweet spot.)
-    - the cell is the join key: a measured-small query set broadcasts into
-      the cell join; a corpus-sized one goes through the SALTED shuffle
-      machinery ids-only with vectors re-attached — the same two physical
-      paths, same laziness contract, and same "never an unbounded
-      driver-built broadcast" invariant as :func:`lsh_topk`.
+    - the cell is the join key of :func:`_bucket_topk`, the rescore path
+      :func:`lsh_topk` uses: the same two physical paths, laziness contract
+      and "never an unbounded driver-built broadcast" invariant. The gate
+      counts EXPLODED query rows (``query_count * n_probe``).
     """
     cent_row = centroids.select(
         F.struct(F.col("cell").cast("int").alias("cell"), F.col("centroid")).alias("c")
@@ -347,56 +349,8 @@ def ivf_topk(
 
     # gate on EXPLODED rows (what would actually be broadcast): a caller's
     # query_count is in queries, the internal count sees post-probe rows
-    if query_count is not None:
-        q_rows = query_count * n_probe
-    elif query_broadcast_max > 0:
-        from .bucket_join import track_persist
-
-        q = track_persist(q)
-        q_rows = q.count()
-    else:
-        q_rows = None
-
-    if q_rows is not None and q_rows <= query_broadcast_max:
-        scored = (
-            c.join(F.broadcast(q), "cell")
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("cosine_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
-        )
-    else:
-        from .bucket_join import salted_sides
-
-        ca = c.select("cell", F.col("neighbor_id").alias("id"))
-        qa = q.select("cell", F.col("query_id").alias("id"))
-        side_c, side_q = salted_sides(ca, qa, ["cell"], "id", hot_threshold, shards)
-        pair_ids = (
-            side_c.alias("c").join(side_q.alias("q"), ["cell", "salt"])
-            .select(
-                F.col("c.id").alias("neighbor_id"),
-                F.col("q.id").alias("query_id"),
-            )
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-        )
-        # each corpus vector lives in exactly ONE cell and a query's probed
-        # cells are distinct, so every (query, neighbor) pair meets at most
-        # once — no dedup needed; vectors re-attach from the PRE-explode
-        # query base (the exploded q carries n_probe copies of q_vec)
-        # both re-attaches read the RAW inputs: joining the derived plans
-        # would re-execute the cell-assignment lineage — for `c` the pruned
-        # plan still carries the 1-row centroid BroadcastNestedLoopJoin
-        # (join elimination does not apply), i.e. a second full corpus
-        # scan+assignment whose only purpose was the cell key
-        scored = (
-            pair_ids
-            .join(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                F.col(vec_col).alias("c_vec")), "neighbor_id")
-            .join(queries.select(F.col(id_col).alias("query_id"),
-                                 F.col(vec_col).alias("q_vec")), "query_id")
-            .withColumn("cosine_sim", F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6))
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine_sim")
+    return _bucket_topk(
+        c, q, "cell", corpus, queries, id_col, vec_col, k,
+        None if query_count is None else query_count * n_probe,
+        query_broadcast_max, hot_threshold, shards,
     )

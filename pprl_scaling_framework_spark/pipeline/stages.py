@@ -11,7 +11,8 @@ Iceberg-style table semantics (SURVEY §1.1) within plain parquet:
   snapshot: row count, wall seconds, per-file row counts (read from the
   written parquet footers on the driver, so a stage runs no Spark job
   beyond its write, as the reference's counters came free with each MR
-  job's output), the result schema, and an optional input FINGERPRINT;
+  job's output), the result schema (as JSON too, so reading a snapshot
+  back needs no schema-inference job), and an optional input FINGERPRINT;
 - resume is pinned to snapshots, not directory presence: ``run(name, build,
   fingerprint=...)`` reuses the current snapshot only while the fingerprint
   matches; a changed input appends a NEW snapshot and the old one stays
@@ -44,6 +45,7 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -264,21 +266,23 @@ class StageRunner:
         since then read as null (exactly how an Iceberg table serves an old
         snapshot after an ADD COLUMN).
         """
-        path = self._snapshot_path(name, snapshot_id)
-        known = {s["id"] for s in self.snapshots(name)}
-        if snapshot_id not in known:
+        snaps = {s["id"]: s for s in self.snapshots(name)}
+        if snapshot_id not in snaps:
             raise KeyError(
                 f"stage {name!r} has no snapshot {snapshot_id} "
-                f"(log: {sorted(known)})"
+                f"(log: {sorted(snaps)})"
             )
+        snap = snaps[snapshot_id]
         if under_current_schema:
             cur = self.current_snapshot_id(name)
             if cur is not None and cur != snapshot_id:
-                cur_schema = self.spark.read.parquet(
-                    self._snapshot_path(name, cur)
-                ).schema
-                return self.spark.read.schema(cur_schema).parquet(path)
-        return self.spark.read.parquet(path)
+                snap = snaps[cur]
+        if "schema_json" in snap:
+            schema = StructType.fromJson(json.loads(snap["schema_json"]))
+        else:  # a record from before schema_json was kept: infer (a Spark job)
+            schema = self.spark.read.parquet(self._snapshot_path(name, snap["id"])).schema
+        return self.spark.read.schema(schema).parquet(
+            self._snapshot_path(name, snapshot_id))
 
     # --- execution ---------------------------------------------------------
 
@@ -382,6 +386,7 @@ class StageRunner:
             "ts": time.time(),
             "fingerprint": fingerprint,
             "schema": out.schema.simpleString(),
+            "schema_json": out.schema.json(),
             "metrics": metrics.to_dict(),
         }
 

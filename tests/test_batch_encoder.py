@@ -120,6 +120,7 @@ def test_enc_golden_plan_parity(spark):
     import os
 
     from pprl_scaling_framework_spark import entry_queries as eq
+    from pprl_scaling_framework_spark.core import planner
 
     path = os.path.join(os.path.dirname(__file__), "golden", "pprl_enc_plan.properties")
     props = {}
@@ -129,7 +130,7 @@ def test_enc_golden_plan_parity(spark):
             props[k] = v
 
     recs = eq._pprl_enc_records(spark)
-    sizes = eq._fbf_dynamic_sizes_from_data(recs)
+    sizes = planner.fbf_dynamic_sizes(eq._field_avg_qgrams(recs), eq._ENC_K)
     assert ",".join(map(str, sizes)) == props["fbf_sizes"]
 
     cfg = schemes.rbf_weighted(

@@ -141,6 +141,28 @@ def test_stage_runner_write_is_the_only_job(spark, tmp_path):
     assert out.count() == 5
 
 
+def test_stage_runner_resume_and_read_start_no_job(spark, tmp_path):
+    """A committed snapshot is read back under the schema its commit
+    recorded: neither a resumed run() nor a read() infers it with a job."""
+    run_dir = str(tmp_path / "run_resume_jobs")
+    StageRunner(spark, run_dir).run(
+        "s", lambda: spark.range(50).withColumn("v", F.col("id") * 2))
+    runner = StageRunner(spark, run_dir)
+
+    def no_rebuild():
+        raise AssertionError("a committed stage was rebuilt")
+
+    n, resumed = _jobs_in_group(
+        spark, "stage_resume", lambda: runner.run("s", no_rebuild))
+    assert n == 0
+    n, read = _jobs_in_group(spark, "stage_read", lambda: runner.read("s"))
+    assert n == 0
+    path = runner._snapshot_path("s", runner.current_snapshot_id("s"))
+    assert resumed.schema == read.schema == spark.read.parquet(path).schema
+    assert sorted(read.collect()) == sorted(resumed.collect())
+    assert read.count() == 50
+
+
 def test_stage_runner_partition_rows_from_footers(spark, tmp_path):
     """partition_rows counts the rows of each written file: a 7-way
     repartition reports 7 entries (the read-back merges them into fewer

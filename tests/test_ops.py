@@ -239,17 +239,6 @@ def test_qgram_count_expr_matches_python(spark, docs):
         assert r["c"] == qgram_count(r["text"], 2), r["text"][:40]
 
 
-def test_multimodal_plumbing(spark):
-    media = multimodal.make_fake_media(spark, n=20)
-    assert media.count() == 20
-    decoded = multimodal.decode_image(media)
-    rows = decoded.collect()
-    assert len(rows) == 20
-    for r in rows:
-        assert len(r["features"]) == 8
-        assert abs(sum(r["features"]) - 1.0) < 1e-5
-
-
 def test_multimodal_real_codecs(spark):
     """PPM/BMP/WAV decode is REAL (pure-Python parsers, no media libs):
     distributed decode must return the exact synthesized pixels/samples."""
@@ -270,6 +259,8 @@ def test_multimodal_real_codecs(spark):
         # PPM and BMP must round-trip to the identical pixel stream
         assert (got["width"], got["height"], got["channels"]) == (w, h, 3)
         assert abs(got["mean_intensity"] - px.mean()) < 1e-3
+        assert len(got["features"]) == 8
+        assert abs(sum(got["features"]) - 1.0) < 1e-5
 
     aud = {r["media_id"]: r for r in
            multimodal.decode_audio(media.filter("kind = 'audio'")).collect()}

@@ -1,6 +1,7 @@
 """Stateful streaming FPS: collision counts must accumulate ACROSS
 micro-batches and emit each frequent pair exactly once at count==C."""
 
+import ast
 import time
 
 import pytest
@@ -9,13 +10,19 @@ from pyspark.sql import functions as F
 from pprl_scaling_framework_spark.streaming.stateful import incremental_frequent_pairs
 
 
-def _stop_when_drained(q, timeout_s=180):
-    """Stop ``q`` once a batch read no rows and no input is left.
+def _stop_when_drained(q, n_files, timeout_s=180):
+    """Stop ``q`` once a batch read no rows after the last of ``n_files``.
 
     The pair-state timeout makes Spark run a batch on every trigger, so an
     ``availableNow`` query never terminates by itself (see
-    ``incremental_frequent_pairs``); a completed batch's output is
-    committed before its progress is reported.
+    ``incremental_frequent_pairs``). A zero-row batch alone does not mean
+    drained: a restarted query can report one BEFORE the batch that reads a
+    newly added file. With ``maxFilesPerTrigger=1`` the file source's
+    ``logOffset`` counts files from 0, so the query is drained once a
+    zero-row batch ends at ``n_files - 1`` (the progress's
+    ``latestOffset`` is not filled in for the file source under
+    ``availableNow``). A completed batch's output is committed before its
+    progress is reported.
     """
     deadline = time.monotonic() + timeout_s
     while time.monotonic() < deadline:
@@ -24,9 +31,13 @@ def _stop_when_drained(q, timeout_s=180):
         if not q.isActive:
             return
         p = q.lastProgress
-        if p is not None and p["numInputRows"] == 0 and not q.status["isDataAvailable"]:
-            q.stop()
-            return
+        if p is not None and p["numInputRows"] == 0:
+            end = p["sources"][0]["endOffset"]  # "{'logOffset': N}" in pyspark 4
+            if isinstance(end, str):
+                end = ast.literal_eval(end)
+            if end is not None and end["logOffset"] == n_files - 1:
+                q.stop()
+                return
         time.sleep(0.1)
     q.stop()
     raise AssertionError(f"query not drained within {timeout_s} s: {q.status}")
@@ -57,7 +68,7 @@ def test_incremental_frequent_pairs_across_batches(spark, tmp_path):
         out.writeStream.format("memory").queryName("freq_mem")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    _stop_when_drained(q)
+    _stop_when_drained(q, n_files=2)
     rows = {(r["id_a"], r["id_b"]): r["collisions"]
             for r in spark.sql("SELECT * FROM freq_mem").collect()}
     assert rows.get(("x", "y")) == 2
@@ -83,7 +94,7 @@ def test_incremental_frequent_pairs_resume_from_checkpoint(spark, tmp_path):
         [("x", "y"), ("x", "y"), ("a", "b"), ("never", "one")], ["id_a", "id_b"]
     ).coalesce(1).write.parquet(str(src / "b1"))
 
-    def run_query():
+    def run_query(n_files):
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -98,9 +109,9 @@ def test_incremental_frequent_pairs_resume_from_checkpoint(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        _stop_when_drained(q)
+        _stop_when_drained(q, n_files)
 
-    run_query()  # processes b1, then terminates (the "kill" point)
+    run_query(1)  # processes b1, then terminates (the "kill" point)
     phase1 = {(r["id_a"], r["id_b"]): r["collisions"]
               for r in spark.read.parquet(sink).collect()}
     assert phase1 == {("x", "y"): 2}
@@ -109,7 +120,7 @@ def test_incremental_frequent_pairs_resume_from_checkpoint(spark, tmp_path):
     spark.createDataFrame([("a", "b")], ["id_a", "id_b"]).coalesce(1).write.parquet(
         str(src / "b2")
     )
-    run_query()  # resumes from the checkpoint: state + source offsets
+    run_query(2)  # resumes from the checkpoint: state + source offsets
     rows = [(r["id_a"], r["id_b"], r["collisions"])
             for r in spark.read.parquet(sink).collect()]
     assert sorted(rows) == [("a", "b", 2), ("x", "y", 2)]
