@@ -435,30 +435,22 @@ def run_streaming_probe() -> dict:
     """
     import shutil
 
-    from pyspark.sql import functions as F
-
     from pprl_scaling_framework_spark.blocking import hlsh
     from pprl_scaling_framework_spark.encoding.encode import encode_dataframe
     from pprl_scaling_framework_spark.sources import repos as repos_src
     from pprl_scaling_framework_spark.streaming import stream_linkage as sl
 
     n = int(os.environ.get("STREAM_ENTITIES", str(N_ENTITIES)))
-    # State-store provider: the pair-collision counter keys on candidate
+    # RocksDB state store: the pair-collision counter keys on candidate
     # pairs, so state grows ~O(colliding pairs) — at 800k entities that is
-    # >10^7 keys and the default HDFSBackedStateStore (whole store on heap,
+    # >10^7 keys, and the default HDFSBackedStateStore (whole store on heap,
     # maintenance copies per batch) plus tmpfs shuffle OOM-killed the JVM
     # (measured: 52 GB of blockmgr in /dev/shm before the kernel killed it).
-    # RocksDB keeps state off-heap/on-disk with bounded block cache — the
-    # production choice for large stateful streams. HDFSBacked remains
-    # opt-in for small corpora (STREAM_STATE_STORE=hdfs).
+    # RocksDB keeps state off-heap/on-disk with a bounded block cache.
     from pprl_scaling_framework_spark.sources.session import build_session
 
-    extra = {}
-    if os.environ.get("STREAM_STATE_STORE", "rocksdb") == "rocksdb":
-        extra["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
+    extra = {"spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")}
     spark = build_session(
         f"pprl-stream-{CPUS}", master=f"local[{CPUS}]",
         shuffle_partitions=max(CPUS * 2, 16), prefer_shuffled_hash=True,
@@ -482,30 +474,19 @@ def run_streaming_probe() -> dict:
     n_records = static.count()
     encoded = encode_dataframe(static, cfg.encoding, included=["uid"]).persist()
     pos = hlsh.position_matrix(plan.L, cfg.hlsh_K, n_bits, cfg.hlsh_seed)
-    # cap mega-buckets with the SAME max_bucket as the batch chain (the
-    # uncapped stream-static join blows up on the hot keys at >=800k —
-    # see streaming.stream_linkage.cap_static_index); persisted post-cap so
-    # the per-micro-batch re-read of the static plan is a cache hit
-    # int64 rid surrogates on BOTH sides (batch r5 lesson, ported to the
-    # stream: 60B uid strings through the join + collision agg spill; 8B
-    # rids keep the per-batch hash agg in memory) and the batch chain's
-    # max_bucket cap (the uncapped join explodes on hot keys — see
-    # streaming.stream_linkage.cap_static_index); persisted post-cap so the
-    # per-micro-batch re-read of the static plan is a cache hit
+    # int64 rid surrogates on BOTH sides (60 B uid strings through the join
+    # + collision agg spill; 8 B rids keep the per-batch hash agg in memory)
+    # and the batch chain's max_bucket cap (the uncapped join explodes on hot
+    # keys — see streaming.stream_linkage.cap_static_index). The capped index
+    # is persisted ALREADY hash-partitioned on the join key: the cached plan
+    # exposes that outputPartitioning, so each micro-batch's join (which
+    # re-executes the static plan) reuses it instead of re-shuffling it
     index = sl.cap_static_index(
         hlsh.blocking_keys(encoded, "uid", "bf", pos, n_bits, hash_uid=True),
         cfg.max_bucket,
-    )
-    if os.environ.get("STREAM_PREPARTITION_INDEX", "1") == "1":
-        # persist the static side ALREADY hash-partitioned on the join key:
-        # the cached plan exposes that outputPartitioning, so each
-        # micro-batch's join reuses it instead of re-shuffling the full
-        # index every trigger (stream-static joins re-execute the static
-        # plan per batch)
-        index = index.repartition(
-            int(spark.conf.get("spark.sql.shuffle.partitions")),
-            "group_id", "key")
-    index = index.persist()
+    ).repartition(
+        int(spark.conf.get("spark.sql.shuffle.partitions")), "group_id", "key"
+    ).persist()
     index.count()
 
     stream = (
@@ -515,8 +496,8 @@ def run_streaming_probe() -> dict:
         .parquet(src_path)
     )
     cands = sl.stream_candidates_against_index(
-        sl.blocking_keys_stream(
-            sl.encode_stream(stream, cfg.encoding), pos, n_bits, hash_uid=True),
+        hlsh.blocking_keys(encode_dataframe(stream, cfg.encoding, included=["uid"]),
+                           "uid", "bf", pos, n_bits, hash_uid=True),
         index, plan.C,
     )
     t0 = time.time()
@@ -604,7 +585,8 @@ def run_skew_probe() -> dict:
     encoded = encode_dataframe(records, cfg.encoding, included=["uid"]).persist()
     encoded.count()
     pos = hlsh.position_matrix(plan.L, cfg.hlsh_K, n_bits, cfg.hlsh_seed)
-    keys = hlsh.blocking_keys(encoded, "uid", "bf", pos, n_bits).persist()
+    # the keys and candidates call of the pipeline's candidates stage
+    keys = hlsh.blocking_keys(encoded, "uid", "bf", pos, n_bits, hash_uid=True).persist()
     keys.count()
 
     variants = {
@@ -619,7 +601,8 @@ def run_skew_probe() -> dict:
         for name, kw in variants.items():
             s = time.time()
             n_pairs = fps.candidate_pairs(
-                keys, None, C=plan.C, self_join=True, uids_a=encoded, **kw
+                keys, None, C=plan.C, self_join=True, uids_a=encoded,
+                key_bits=cfg.hlsh_K, n_groups=plan.L, uids_hashed=True, **kw
             ).count()
             dt = round(time.time() - s, 2)
             cur = out.get(name)

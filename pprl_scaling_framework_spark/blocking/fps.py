@@ -51,8 +51,9 @@ def candidate_pairs(
 
     Shuffle-volume note: the join + count run on ``rid = xxhash64(uid)``
     (8 bytes) instead of the uid string; uids are re-attached afterwards via
-    broadcast dictionaries. (64-bit surrogates are collision-safe to ~10^8
-    records per side; beyond that swap in a 128-bit surrogate.) A caller that
+    broadcast dictionaries. Two uids with one 64-bit surrogate merge their
+    pairs: for n records the birthday bound is P ≈ 1 − exp(−n²/2⁶⁵), about
+    3·10⁻⁴ at 10⁸ records and 0.027 at 10⁹. A caller that
     built keys with ``hlsh.blocking_keys(..., hash_uid=True)`` must pass
     ``uids_hashed=True``: the keys' uid column is then the xxhash64 surrogate
     already and the per-exploded-row re-hash is skipped. Without the flag the

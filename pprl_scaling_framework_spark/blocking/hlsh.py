@@ -80,8 +80,10 @@ def blocking_keys(
     ``hash_uid``: emit ``xxhash64(uid)`` (int64 surrogate) instead of the uid
     string — hashed BEFORE the L-way explode, so the L rows per record carry
     8 bytes of id instead of a ~60-byte string (the surrogate the FPS join
-    uses anyway; ``fps.candidate_pairs`` detects the bigint uid and skips
-    re-hashing). Shrinks the persisted key set and every downstream shuffle.
+    uses anyway; pass ``uids_hashed=True`` to ``fps.candidate_pairs`` so it
+    skips re-hashing). Shrinks the persisted key set and every downstream
+    shuffle. Two uids with one surrogate become one record downstream: for n
+    records P ≈ 1 − exp(−n²/2⁶⁵), about 3·10⁻⁴ at 10⁸ and 0.027 at 10⁹.
     """
     udf = hlsh_keys_udf(positions, n_bits)
     uid_expr = (

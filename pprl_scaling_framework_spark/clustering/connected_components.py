@@ -105,6 +105,11 @@ def connected_components(
     to force the distributed path. If that loop has not converged after
     ``max_iterations`` rounds it raises ``RuntimeError`` instead of
     returning a partial labelling.
+
+    The driver path labels vertices by their 64-bit xxhash64 surrogate; two
+    vertices that share one merge their components. For n vertices the
+    birthday bound is P ≈ 1 − exp(−n²/2⁶⁵): about 10⁻⁷ at the default
+    threshold's at most 2·10⁶ vertices.
     """
     edges = _canon(
         pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -117,9 +122,8 @@ def connected_components(
         # int64 xxhash64 surrogates, not uid strings — 16 B/edge keeps the
         # 1M-edge fast path ~16 MB — limited to threshold+1 rows, so a
         # too-large edge set costs one truncated fetch, and <= threshold
-        # rows from a limit IS the complete set. (64-bit surrogates are
-        # collision-safe to ~10^8 vertices; the distributed path takes over
-        # well before that.)
+        # rows from a limit IS the complete set (collision bound: see the
+        # docstring)
         rows = (
             edges.select(F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst"))
             .limit(driver_threshold + 1)

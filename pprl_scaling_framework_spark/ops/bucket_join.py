@@ -16,7 +16,9 @@ i.e. shuffle volume — scales with the skew instead of a flat factor.
 
 Optional ``max_bucket`` drops buckets above a hard cap (changes the output —
 off by default; for 100 TB runs where a boilerplate bucket's pairs are
-worthless and quadratic).
+worthless and quadratic). :func:`bucket_tiers` is the one bucket-size table
+behind both the salting and the cap; the stream index cap
+(``streaming.stream_linkage.cap_static_index``) reads it too.
 """
 
 from __future__ import annotations
@@ -99,6 +101,43 @@ def spread_width(df: DataFrame) -> int:
     return max(df.sparkSession.sparkContext.defaultParallelism, 8)
 
 
+def bucket_tiers(
+    size_src: DataFrame,
+    bucket_cols: list[str],
+    hot_threshold: int,
+    shards: int,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """-> (``bucket_cols``, ``_ns``, ``_mega``): the skew tiers of the buckets
+    of ``size_src`` that hold more than ``hot_threshold`` rows.
+
+    ``_ns`` is the salt-shard count ``ceil(sz / hot_threshold)``, capped at
+    ``shards``; ``_mega`` marks ``sz > max_bucket`` (never, when None).
+    Buckets at or below ``hot_threshold`` get no row. The table is
+    persisted + counted once, and BROADCAST when measured small (at most
+    ``HOT_BROADCAST_MAX_ROWS``; it is bounded by ``rows / hot_threshold``
+    and is usually a few thousand rows). Without that, with AQE disabled or
+    cost-based stats unavailable, Catalyst shuffle-joins the FULL key set
+    against the sizes aggregate once per consumer — measured as ~30% of
+    the candidates stage at 10M keys. A measured-large table (pathological
+    skew) stays a persisted shuffle join: never a driver-built broadcast of
+    an unbounded table. Tiering is exact either way — salting/caps never
+    guess.
+    """
+    sizes = size_src.groupBy(*bucket_cols).agg(F.count("*").alias("_bs"))
+    n_shards = F.least(
+        F.lit(shards), F.ceil(F.col("_bs") / F.lit(hot_threshold)).cast("int")
+    )
+    flagged = sizes.filter(F.col("_bs") > hot_threshold).select(
+        *bucket_cols, n_shards.alias("_ns"),
+        (F.col("_bs") > max_bucket if max_bucket is not None else F.lit(False)).alias("_mega"),
+    )
+    flagged = track_persist(flagged)
+    if flagged.count() <= HOT_BROADCAST_MAX_ROWS:
+        flagged = F.broadcast(flagged)
+    return flagged
+
+
 def salted_sides(
     keys_a: DataFrame,
     keys_b: DataFrame,
@@ -113,7 +152,8 @@ def salted_sides(
     Bucket sizes are measured on the B side for a self-join (``keys_a is
     keys_b``) and on the UNION of both sides otherwise — a bucket hot on only
     one side (e.g. the A party of a two-party linkage) must still be salted,
-    or all its rows land in one shuffle task. Three tiers by size ``sz``:
+    or all its rows land in one shuffle task. Three tiers by size ``sz``
+    (:func:`bucket_tiers`, joined into both sides):
 
     - ``sz > max_bucket`` (when set): DROPPED from both sides;
     - ``hot_threshold < sz <= max_bucket``: salted — A sharded
@@ -121,33 +161,13 @@ def salted_sides(
       (capped at ``shards``), B replicated across those shards; every pair
       still meets exactly once per bucket, counts unchanged;
     - ``sz <= hot_threshold``: salt 0.
-
-    The hot tail is persisted + counted once, and BROADCAST into both tag
-    joins when measured small (the overwhelmingly common case — it is
-    bounded by ``rows / hot_threshold`` and is usually a few thousand rows).
-    Without that, with AQE disabled or cost-based stats unavailable,
-    Catalyst shuffle-joins the FULL key set against the sizes aggregate
-    TWICE (once per side) — measured as ~30% of the candidates stage at 10M
-    keys. A measured-large hot tail (pathological skew) stays a
-    persisted shuffle join: never a driver-built broadcast of an unbounded
-    table. Tiering is exact either way — salting/caps never guess.
     """
     size_src = (
         keys_b.select(*bucket_cols)
         if keys_a is keys_b
         else keys_a.select(*bucket_cols).unionByName(keys_b.select(*bucket_cols))
     )
-    sizes = size_src.groupBy(*bucket_cols).agg(F.count("*").alias("_bs"))
-    n_shards = F.least(
-        F.lit(shards), F.ceil(F.col("_bs") / F.lit(hot_threshold)).cast("int")
-    )
-    flagged = sizes.filter(F.col("_bs") > hot_threshold).select(
-        *bucket_cols, n_shards.alias("_ns"),
-        (F.col("_bs") > max_bucket if max_bucket is not None else F.lit(False)).alias("_mega"),
-    )
-    flagged = track_persist(flagged)
-    if flagged.count() <= HOT_BROADCAST_MAX_ROWS:
-        flagged = F.broadcast(flagged)
+    flagged = bucket_tiers(size_src, bucket_cols, hot_threshold, shards, max_bucket)
     a = (
         keys_a.join(flagged, bucket_cols, "left")
         .filter(F.col("_mega").isNull() | ~F.col("_mega"))

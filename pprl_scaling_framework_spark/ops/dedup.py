@@ -187,7 +187,12 @@ def minhash_lsh_pairs(
     shards: int = 16,
 ) -> DataFrame:
     """-> (id_a, id_b, jaccard) for pairs sharing >= 1 LSH band, verified
-    with exact Jaccard over the distinct q-gram sets, jaccard >= threshold."""
+    with exact Jaccard over the distinct q-gram sets, jaccard >= threshold.
+
+    The band bucket key is a 64-bit xxhash64 of (band, band signature). Two
+    buckets that share one merge, which adds candidates but no output pair
+    (every pair is verified): for n distinct buckets P ≈ 1 − exp(−n²/2⁶⁵),
+    about 3·10⁻⁴ at 10⁸ buckets and 0.027 at 10⁹."""
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes
 
@@ -214,8 +219,8 @@ def minhash_lsh_pairs(
     # key (it never reaches the output), so any injective-in-practice hash
     # yields the identical pair set — and an 8-byte long through the salted
     # join/distinct shuffles ~8x fewer key bytes and hash-probes far cheaper
-    # than a string (the same surrogate argument as the FPS rid keys; a
-    # collision would merge two buckets and is caught by the oracle gate)
+    # than a string (the same surrogate argument as the FPS rid keys; for
+    # the collision bound see the docstring)
     banded = base.select(
         "id", F.size("hg").alias("ng"),
         F.posexplode(

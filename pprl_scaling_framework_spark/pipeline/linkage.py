@@ -23,6 +23,7 @@ from ..encoding.encode import encode_dataframe
 from ..encoding.schemes import EncodingConfig
 from ..clustering.connected_components import connected_components
 from ..ops.bucket_join import release_scoped, track_persist
+from ..ops.dedup import content_digest
 from ..matching.score import matched_pairs as _matched_pairs
 from .stages import StageRunner
 
@@ -83,18 +84,9 @@ def collapse_exact_duplicates(
     representatives carry one row per distinct content digest (min uid wins)
     and ``uid_to_rep`` maps every uid to its representative. A record whose
     content is NULL has no digest and represents itself.
-
-    When the input already carries the stage-0 ``sha256`` column
-    (``sources.repos.with_uid_and_sha`` defines it as exactly
-    ``sha2(content, 256)``), it is reused instead of re-hashing every
-    content payload a second time — same digest by construction.
     """
-    if content_col == "content" and "sha256" in records.columns:
-        digest = F.col("sha256")
-    else:
-        digest = F.sha2(F.col(content_col), 256)
     digests = records.select(
-        F.col(uid_col).alias("uid"), digest.alias("_digest")
+        F.col(uid_col).alias("uid"), content_digest(content_col).alias("_digest")
     )
     reps = digests.groupBy("_digest").agg(F.min("uid").alias("rep_uid"))
     # sha2(NULL) is NULL and a NULL key joins nothing: a record without

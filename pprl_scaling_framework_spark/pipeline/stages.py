@@ -290,8 +290,6 @@ class StageRunner:
         self,
         name: str,
         build: Callable[[], DataFrame],
-        repartition: int | None = None,
-        extra_metrics: dict | None = None,
         fingerprint: str | None = None,
     ) -> DataFrame:
         """Build + snapshot the stage unless its current snapshot is reusable.
@@ -339,8 +337,6 @@ class StageRunner:
                 snapshot_id += 1
         t0 = time.time()
         df = build()
-        if repartition:
-            df = df.repartition(repartition)
         try:
             df.write.mode("overwrite").parquet(path)
         except Exception:
@@ -379,7 +375,7 @@ class StageRunner:
 
         metrics = StageMetrics(
             name=name, rows=rows, seconds=round(seconds, 3),
-            partitions=partitions, partition_rows=pr, extra=extra_metrics or {},
+            partitions=partitions, partition_rows=pr,
         )
         snap_record = {
             "id": snapshot_id,

@@ -1,12 +1,12 @@
-"""Structured-Streaming incremental encode/block.
+"""Structured-Streaming candidate generation against a static index.
 
-The reference is batch-only MR; this is new-in-rebuild surface: a stream of
-repo-file records is encoded and blocked incrementally — the same vectorized
-UDFs run unchanged on a streaming DataFrame, so a 100 TB backfill and a
-trickle of new commits share one code path. Candidate generation against an
-existing (static) index is a stream-static join, which Spark supports
-without watermarks; stream-stream self-joins of blocking keys would need an
-event-time watermark on both sides.
+The reference is batch-only MR; this is new-in-rebuild surface. A stream of
+repo-file records runs the batch stages unchanged — ``encode_dataframe`` and
+``hlsh.blocking_keys`` work on a streaming DataFrame — so a 100 TB backfill
+and a trickle of new commits share one code path. Candidate generation
+against an existing (static) index is a stream-static join, which Spark
+supports without watermarks; stream-stream self-joins of blocking keys would
+need an event-time watermark on both sides.
 """
 
 from __future__ import annotations
@@ -14,74 +14,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..blocking import hlsh
-from ..encoding.encode import encode_udf
-from ..encoding.schemes import EncodingConfig
-
-
-def encode_stream(
-    stream_df: DataFrame, config: EncodingConfig, uid_col: str = "uid"
-) -> DataFrame:
-    """Streaming encode: identical UDF as batch (works on readStream DFs)."""
-    udf = encode_udf(config)
-    return stream_df.select(
-        F.col(uid_col).alias("uid"),
-        udf(*[F.col(f) for f in config.fields]).alias("bf"),
-    )
-
-
-def blocking_keys_stream(
-    encoded_stream: DataFrame, positions, n_bits: int, hash_uid: bool = False
-) -> DataFrame:
-    """Streaming HLSH keys: posexplode of the key-array UDF.
-
-    ``hash_uid``: same 8-byte xxhash64 surrogate as the batch path
-    (``blocking.hlsh.blocking_keys``), applied BEFORE the L-way explode. At
-    800k records the candidate join + collision aggregation carry two ids
-    per row; with ~60-byte uid strings the per-batch partial aggregation
-    spilled gigabytes of sorted runs — with int64 rids the same rows are
-    ~8x smaller and the hash map stays in memory. Pair with an identically
-    hashed static index and re-attach real uids from a (rid, uid)
-    dictionary after the C-threshold, exactly like ``fps.candidate_pairs``.
-    """
-    udf = hlsh.hlsh_keys_udf(positions, n_bits)
-    uid_expr = (
-        F.xxhash64(F.col("uid")).alias("uid") if hash_uid else F.col("uid")
-    )
-    return encoded_stream.select(
-        uid_expr, F.posexplode(udf(F.col("bf"))).alias("group_id", "key")
-    )
+from ..ops.bucket_join import bucket_tiers
 
 
 def cap_static_index(static_keys: DataFrame, max_bucket: int) -> DataFrame:
     """Drop mega-buckets (> ``max_bucket`` rows per (group_id, key)) from a
-    static blocking index — the streaming counterpart of the batch path's
-    ``max_bucket`` cap (``ops/bucket_join.salted_sides``).
+    static blocking index, with the batch cap's tier table
+    (``ops.bucket_join.bucket_tiers``).
 
-    Without it the stream-static join output explodes on the same
+    Sizes are counted over the index alone. The batch cap counts them over
+    both sides of a two-party join, so a bucket that only the streamed
+    records push past ``max_bucket`` is kept here: stream and batch agree
+    where the stream adds few rows to any one bucket, not in general.
+
+    Without the cap the stream-static join output explodes on the same
     low-information hot keys that carry ~73% of batch join volume: measured
     at 800k records, the UNCAPPED join fed the per-batch partial aggregation
     billions of rows, overflowed every hash-agg into sort-based fallback
     (16 executor threads spilling for >15 min, 13 GB written), and with the
-    heap-backed state store OOM-killed the JVM. Mega-buckets are few (~0.1%
-    of keys), so the drop set is broadcast into an anti-join; the caller
-    should persist the result once — the stream re-reads the static plan
-    every micro-batch.
+    heap-backed state store OOM-killed the JVM. Cap once and persist the
+    result: the stream re-reads the static plan every micro-batch.
     """
-    dropped = (
-        static_keys.groupBy("group_id", "key")
-        .agg(F.count("*").alias("sz"))
-        .filter(F.col("sz") > max_bucket)
-        .select("group_id", "key")
-    )
-    return static_keys.join(
-        F.broadcast(dropped), ["group_id", "key"], "left_anti"
-    )
+    mega = bucket_tiers(static_keys, ["group_id", "key"], max_bucket, 1, max_bucket)
+    return static_keys.join(mega, ["group_id", "key"], "left_anti")
 
 
 def stream_candidates_against_index(
     key_stream: DataFrame, static_keys: DataFrame, C: int,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Stream-static join: new records probe the existing blocking index.
 
@@ -89,12 +48,8 @@ def stream_candidates_against_index(
     side is the snapshot of a prior batch run (e.g. the ``block`` stage
     parquet) — the streaming analog of the reference's V1 'buckets in
     distributed cache' design (``mr-blocking/FPSMapperV1.java:158-209``).
-
-    ``max_bucket`` applies :func:`cap_static_index` to the static side —
-    REQUIRED at scale (see that function's docstring); match the batch
-    pipeline's cap so stream and batch emit identical candidate sets. A
-    dropped bucket contributes no stream-index pairs, exactly like the batch
-    cap's drop-from-both-sides semantics.
+    At scale, pass an index capped once by :func:`cap_static_index` and
+    persisted.
     """
     s = key_stream.select(
         F.col("uid").alias("id_new"), "group_id", "key"
@@ -102,8 +57,6 @@ def stream_candidates_against_index(
     idx = static_keys.select(
         F.col("uid").alias("id_indexed"), "group_id", "key"
     )
-    if max_bucket is not None:
-        idx = cap_static_index(idx, max_bucket)
     return (
         s.join(idx, ["group_id", "key"])
         .filter(F.col("id_new") != F.col("id_indexed"))

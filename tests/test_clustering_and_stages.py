@@ -168,7 +168,7 @@ def test_stage_runner_partition_rows_from_footers(spark, tmp_path):
     repartition reports 7 entries (the read-back merges them into fewer
     splits), and an empty stage reports its one empty file."""
     runner = StageRunner(spark, str(tmp_path / "run_footers"))
-    runner.run("rep", lambda: spark.range(1000), repartition=7)
+    runner.run("rep", lambda: spark.range(1000).repartition(7))
     m = runner.manifest["stages"]["rep"]["metrics"]
     assert m["partitions"] == 7
     assert sorted(m["partition_rows"]) == [str(i) for i in range(7)]

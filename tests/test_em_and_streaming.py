@@ -115,7 +115,6 @@ def test_streaming_encode_and_block(spark, tmp_path):
     from pprl_scaling_framework_spark.encoding import schemes
     from pprl_scaling_framework_spark.encoding.encode import encode_dataframe
     from pprl_scaling_framework_spark.sources import repos as repos_src
-    from pprl_scaling_framework_spark.streaming import stream_linkage
 
     cfg = schemes.clk(["content"], N=1024, K=5, Q=2)
     records = repos_src.with_uid_and_sha(
@@ -125,9 +124,10 @@ def test_streaming_encode_and_block(spark, tmp_path):
     records.write.mode("overwrite").parquet(src)
 
     stream = spark.readStream.schema(records.schema).parquet(src)
-    enc_stream = stream_linkage.encode_stream(stream, cfg)
+    # the batch stage functions run unchanged on the streaming DataFrame
+    enc_stream = encode_dataframe(stream, cfg, included=["uid"])
     pos = hlsh.position_matrix(8, 10, 1024, 42)
-    key_stream = stream_linkage.blocking_keys_stream(enc_stream, pos, 1024)
+    key_stream = hlsh.blocking_keys(enc_stream, "uid", "bf", pos, 1024)
 
     q = (
         key_stream.writeStream.format("memory")
@@ -148,8 +148,7 @@ def test_streaming_encode_and_block(spark, tmp_path):
 
     # rid-surrogate variant: the stream's hash_uid must be the batch one
     q2 = (
-        stream_linkage.blocking_keys_stream(
-            stream_linkage.encode_stream(stream, cfg), pos, 1024, hash_uid=True)
+        hlsh.blocking_keys(enc_stream, "uid", "bf", pos, 1024, hash_uid=True)
         .writeStream.format("memory").queryName("keys_mem_rid")
         .outputMode("append").trigger(availableNow=True).start()
     )
@@ -184,8 +183,8 @@ def test_streaming_windowed_counts(spark, tmp_path):
 
 
 def test_stream_candidates_cap_parity(spark, tmp_path):
-    """max_bucket on the stream-static candidate join: identical pairs to an
-    independently-computed capped batch join, and the cap actually bites
+    """cap_static_index on the stream-static candidate join: identical pairs
+    to an independently-computed capped batch join, and the cap actually bites
     (uncapped emits MORE pairs on the skewed corpus). The cap is what keeps
     the per-batch join output bounded at scale — see cap_static_index."""
     from pprl_scaling_framework_spark.blocking import hlsh
@@ -210,11 +209,11 @@ def test_stream_candidates_cap_parity(spark, tmp_path):
     assert sizes.agg(F.max("count")).first()[0] > cap  # cap must bite
 
     stream = spark.readStream.schema(records.schema).parquet(src)
-    key_stream = stream_linkage.blocking_keys_stream(
-        stream_linkage.encode_stream(stream, cfg), pos, 1024)
+    key_stream = hlsh.blocking_keys(
+        encode_dataframe(stream, cfg, included=["uid"]), "uid", "bf", pos, 1024)
     q = (
         stream_linkage.stream_candidates_against_index(
-            key_stream, index, C, max_bucket=cap)
+            key_stream, stream_linkage.cap_static_index(index, cap), C)
         .writeStream.format("memory").queryName("cap_mem")
         .outputMode("complete").trigger(availableNow=True).start()
     )

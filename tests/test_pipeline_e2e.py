@@ -271,6 +271,20 @@ def test_pipeline_edge_inputs(spark, records, tmp_path, kind):
     res.release()
 
 
+def test_collapse_ignores_a_sha256_column(spark):
+    """The exact collapse hashes the content itself: two records with
+    different content stay separate even when a column named ``sha256``
+    claims they are equal."""
+    from pprl_scaling_framework_spark.pipeline.linkage import collapse_exact_duplicates
+
+    recs = spark.createDataFrame(
+        [("u1", "alpha", "bogus"), ("u2", "beta", "bogus")],
+        "uid string, content string, sha256 string")
+    reps, uid_to_rep = collapse_exact_duplicates(recs, "uid", "content")
+    assert sorted(r["uid"] for r in reps.collect()) == ["u1", "u2"]
+    assert sorted(tuple(r) for r in uid_to_rep.collect()) == [("u1", "u1"), ("u2", "u2")]
+
+
 def test_dedup_persists_multi_consumer_stages(spark, records):
     """Without a runner, the encode and block outputs (each read by more
     than one consumer) are cached, so their Python UDFs run once."""

@@ -1,46 +1,7 @@
 """Stateful streaming FPS: collision counts must accumulate ACROSS
 micro-batches and emit each frequent pair exactly once at count==C."""
 
-import ast
-import time
-
-import pytest
-from pyspark.sql import functions as F
-
 from pprl_scaling_framework_spark.streaming.stateful import incremental_frequent_pairs
-
-
-def _stop_when_drained(q, n_files, timeout_s=180):
-    """Stop ``q`` once a batch read no rows after the last of ``n_files``.
-
-    The pair-state timeout makes Spark run a batch on every trigger, so an
-    ``availableNow`` query never terminates by itself (see
-    ``incremental_frequent_pairs``). A zero-row batch alone does not mean
-    drained: a restarted query can report one BEFORE the batch that reads a
-    newly added file. With ``maxFilesPerTrigger=1`` the file source's
-    ``logOffset`` counts files from 0, so the query is drained once a
-    zero-row batch ends at ``n_files - 1`` (the progress's
-    ``latestOffset`` is not filled in for the file source under
-    ``availableNow``). A completed batch's output is committed before its
-    progress is reported.
-    """
-    deadline = time.monotonic() + timeout_s
-    while time.monotonic() < deadline:
-        if q.exception() is not None:
-            raise q.exception()
-        if not q.isActive:
-            return
-        p = q.lastProgress
-        if p is not None and p["numInputRows"] == 0:
-            end = p["sources"][0]["endOffset"]  # "{'logOffset': N}" in pyspark 4
-            if isinstance(end, str):
-                end = ast.literal_eval(end)
-            if end is not None and end["logOffset"] == n_files - 1:
-                q.stop()
-                return
-        time.sleep(0.1)
-    q.stop()
-    raise AssertionError(f"query not drained within {timeout_s} s: {q.status}")
 
 
 def test_incremental_frequent_pairs_across_batches(spark, tmp_path):
@@ -50,13 +11,14 @@ def test_incremental_frequent_pairs_across_batches(spark, tmp_path):
 
     # batch files processed one per trigger: pair (a,b) collides once per
     # batch -> must only emit after the second batch; (x,y) collides twice
-    # in batch 1 -> emits immediately; (lone, pair) never reaches C=2.
+    # in batch 1 -> emits immediately, and its third collision in batch 2
+    # must not emit it again; (lone, pair) never reaches C=2.
     spark.createDataFrame(
         [("a", "b"), ("x", "y"), ("x", "y"), ("lone", "pair")], schema.split(", ")
     ).toDF("id_a", "id_b").coalesce(1).write.parquet(str(src / "b1"))
-    spark.createDataFrame([("a", "b")], ["id_a", "id_b"]).coalesce(1).write.parquet(
-        str(src / "b2")
-    )
+    spark.createDataFrame(
+        [("a", "b"), ("x", "y")], ["id_a", "id_b"]
+    ).coalesce(1).write.parquet(str(src / "b2"))
 
     stream = (
         spark.readStream.schema(schema)
@@ -68,7 +30,7 @@ def test_incremental_frequent_pairs_across_batches(spark, tmp_path):
         out.writeStream.format("memory").queryName("freq_mem")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    _stop_when_drained(q, n_files=2)
+    assert q.awaitTermination(180)
     rows = {(r["id_a"], r["id_b"]): r["collisions"]
             for r in spark.sql("SELECT * FROM freq_mem").collect()}
     assert rows.get(("x", "y")) == 2
@@ -76,6 +38,8 @@ def test_incremental_frequent_pairs_across_batches(spark, tmp_path):
     assert ("lone", "pair") not in rows
     # emitted exactly once each
     assert spark.sql("SELECT count(*) c FROM freq_mem").collect()[0]["c"] == 2
+    assert spark.sql(
+        "SELECT count(*) c FROM freq_mem WHERE id_a = 'x'").collect()[0]["c"] == 1
 
 
 def test_incremental_frequent_pairs_resume_from_checkpoint(spark, tmp_path):
@@ -109,7 +73,7 @@ def test_incremental_frequent_pairs_resume_from_checkpoint(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        _stop_when_drained(q, n_files)
+        assert q.awaitTermination(180)
 
     run_query(1)  # processes b1, then terminates (the "kill" point)
     phase1 = {(r["id_a"], r["id_b"]): r["collisions"]
