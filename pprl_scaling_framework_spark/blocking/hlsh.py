@@ -14,7 +14,7 @@ Spark-first design decisions:
 - since K <= 62, a key is packed into ONE int64 (bit j of the key = sampled
   bit j) instead of a BitSet/binary — an int64 join key shuffles and
   compares inside Tungsten with no object overhead;
-- one vectorized UDF emits all L keys as ``array<long>``; ``posexplode``
+- one vectorized UDF emits all L keys as ``array<long>``; ``posexplode_outer``
   yields ``(group_id, key)`` — L rows per record, exactly the reference's
   mapper fan-out (``mr-blocking/HammingLSHBlockingMapper.java:26-37``).
 """
@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from ..core.bloom import unpack_bits
+from ..core.bloom import stack_binary
 from ..core.javarandom import shuffled_range_prefix
 from ..sources.session import worker_task_setup
 
@@ -58,8 +58,7 @@ def hlsh_keys_udf(positions: np.ndarray, n_bits: int):
     @F.pandas_udf(ArrayType(LongType()))
     def _keys(bf: pd.Series) -> pd.Series:
         worker_task_setup()
-        nb = (n_bits + 7) // 8
-        packed = np.frombuffer(b"".join(bf.tolist()), dtype=np.uint8).reshape(len(bf), nb)
+        packed = stack_binary(bf.tolist(), n_bits)
         sel = (packed[:, byte_idx] >> shifts) & 1          # (B, L*K) uint8
         keys = sel.reshape(len(bf), L, K).astype(np.int64) @ powers  # (B, L)
         return pd.Series(list(keys))
@@ -90,7 +89,8 @@ def blocking_keys(
         F.xxhash64(F.col(uid_col)).alias("uid") if hash_uid
         else F.col(uid_col).alias("uid")
     )
+    # _outer: posexplode's inferred isnotnull/size filter would run _keys twice
     return (
         df.select(uid_expr, udf(F.col(bf_col)).alias("_keys"))
-        .select("uid", F.posexplode("_keys").alias("group_id", "key"))
+        .select("uid", F.posexplode_outer("_keys").alias("group_id", "key"))
     )

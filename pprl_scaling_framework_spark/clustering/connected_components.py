@@ -60,6 +60,12 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
+def _sig(edges: DataFrame) -> tuple:
+    """A cheap order-insensitive checksum of the edge multiset (one job)."""
+    row = edges.agg(F.count("*"), F.expr("bit_xor(xxhash64(src, dst))")).collect()[0]
+    return tuple(row)
+
+
 def _driver_union_find(edges_rows) -> list[tuple[str, str]]:
     """In-memory union-find with path compression (small-graph fast path)."""
     parent: dict[str, str] = {}
@@ -164,20 +170,14 @@ def connected_components(
         .localCheckpoint()
     )
 
+    # converged when a round leaves the edge multiset unchanged; each round
+    # checksums only its own output
+    sig = _sig(edges)
     for _ in range(max_iterations):
-        edges2 = _small_star(_large_star(edges)).localCheckpoint()
-        # convergence: edge multiset stable (cheap order-insensitive checksum)
-        def _sig(e: DataFrame):
-            row = e.agg(
-                F.count("*").alias("c"),
-                F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-            ).collect()[0]
-            return (row["c"], row["h"])
-
-        if _sig(edges2) == _sig(edges):
-            edges = edges2
+        edges = _small_star(_large_star(edges)).localCheckpoint()
+        prev, sig = sig, _sig(edges)
+        if sig == prev:
             break
-        edges = edges2
     else:
         raise RuntimeError(
             f"connected_components did not converge in max_iterations="

@@ -53,13 +53,19 @@ def similarity(method: str, a: np.ndarray, b: np.ndarray) -> np.ndarray:
     raise ValueError(f"unknown similarity method {method!r}")
 
 
+def check_threshold(method: str, threshold: float) -> None:
+    """K5 ranges: jaccard/dice take t in (0, 1], hamming takes t > 1."""
+    if method not in ("jaccard", "dice", "hamming"):
+        raise ValueError(f"unknown similarity method {method!r}")
+    if not (threshold > 1 if method == "hamming" else 0 < threshold <= 1):
+        raise ValueError(f"{method} threshold {threshold} out of range: "
+                         "jaccard/dice take (0, 1], hamming > 1")
+
+
 def passes_threshold(method: str, scores: np.ndarray, threshold: float) -> np.ndarray:
     """K5 threshold dispatch: >= for jaccard/dice, <= for hamming."""
-    if method == "hamming":
-        return scores <= threshold
-    if method in ("jaccard", "dice"):
-        return scores >= threshold
-    raise ValueError(f"unknown similarity method {method!r}")
+    check_threshold(method, threshold)
+    return scores <= threshold if method == "hamming" else scores >= threshold
 
 
 # --- naive per-bit reference implementations (property-test oracles) ------

@@ -5,77 +5,56 @@ distributed-cache fan-out mapper + reduce-side pair assembly
 (``mr-blocking/MakeRecordPairsMapper.java:41-178``,
 ``PrivateSimilarityReducer.java:71-104``). In Spark that whole machinery is
 two equi-joins re-attaching the ``bf`` column — broadcast when small, AQE
-otherwise — followed by one batched popcount UDF and a threshold filter.
+otherwise — followed by one Arrow batch function that scores each pair and
+keeps those passing K5, the reference's compare-then-classify loop
+(``lib/matching/PrivateSimilarityUtil.java:12-18,52-67``). A ``mapInArrow``
+boundary is opaque to Catalyst, so no predicate re-evaluates the score.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..core import similarity as sim
-from ..core.bloom import stack_binary
+from ..core.bloom import n_bytes
 from ..sources.session import worker_task_setup
 
 
-def similarity_udf(method: str, n_bits: int):
-    """Vectorized (bf_a, bf_b) -> double similarity/distance kernel (K1-K4)."""
+def _bf_matrix(col: pa.Array, nb: int) -> np.ndarray:
+    """A binary Arrow column of ``nb``-byte filters -> uint8[rows, nb] over
+    its data buffer (no copy); raises on a null or wrong-length filter."""
+    if col.null_count:
+        raise ValueError("null Bloom filter in a scored pair")
+    if not len(col):
+        return np.empty((0, nb), dtype=np.uint8)
+    _, offsets, data = col.buffers()
+    offs = np.frombuffer(offsets, dtype=np.int32)[col.offset:col.offset + len(col) + 1]
+    if (np.diff(offs) != nb).any():
+        raise ValueError(f"Bloom filter of the wrong length (expected {nb} bytes)")
+    return np.frombuffer(data, dtype=np.uint8)[offs[0]:offs[-1]].reshape(len(col), nb)
 
-    @F.pandas_udf(DoubleType())
-    def _sim(a: pd.Series, b: pd.Series) -> pd.Series:
+
+def pair_scorer(method: str, threshold: float, n_bits: int):
+    """``mapInArrow`` function: (id_a, id_b, bf_a, bf_b) batches -> the
+    (id_a, id_b, sim) rows passing K5."""
+    nb = n_bytes(n_bits)
+
+    def score(batches):
         worker_task_setup()
-        am = stack_binary(a.tolist(), n_bits)
-        bm = stack_binary(b.tolist(), n_bits)
-        return pd.Series(sim.similarity(method, am, bm))
+        for batch in batches:
+            s = sim.similarity(method, _bf_matrix(batch.column("bf_a"), nb),
+                               _bf_matrix(batch.column("bf_b"), nb))
+            keep = sim.passes_threshold(method, s, threshold)
+            ids = batch.select(["id_a", "id_b"]).filter(pa.array(keep))
+            yield pa.RecordBatch.from_arrays(
+                [*ids.columns, pa.array(s[keep], type=pa.float64())],
+                names=["id_a", "id_b", "sim"])
 
-    return _sim
-
-
-def attach_encodings(
-    pairs: DataFrame,
-    encoded_a: DataFrame,
-    encoded_b: DataFrame | None = None,
-    uid_col: str = "uid",
-    bf_col: str = "bf",
-) -> DataFrame:
-    """J3: (id_a, id_b, ...) x encodings -> + (bf_a, bf_b)."""
-    encoded_b = encoded_b if encoded_b is not None else encoded_a
-    ea = encoded_a.select(F.col(uid_col).alias("id_a"), F.col(bf_col).alias("bf_a"))
-    eb = encoded_b.select(F.col(uid_col).alias("id_b"), F.col(bf_col).alias("bf_b"))
-    return pairs.join(ea, "id_a").join(eb, "id_b")
-
-
-def score_pairs(
-    pairs_with_bf: DataFrame,
-    method: str,
-    n_bits: int,
-    score_col: str = "sim",
-) -> DataFrame:
-    udf = similarity_udf(method, n_bits)
-    return pairs_with_bf.withColumn(score_col, udf(F.col("bf_a"), F.col("bf_b")))
-
-
-def classify(
-    scored: DataFrame,
-    method: str,
-    threshold: float,
-    score_col: str = "sim",
-) -> DataFrame:
-    """K5 threshold dispatch: jaccard/dice >= t (t in (0,1]); hamming <= t (t>1)."""
-    if method == "hamming":
-        if threshold <= 1:
-            raise ValueError("hamming threshold must be > 1")
-        pred = F.col(score_col) <= threshold
-    elif method in ("jaccard", "dice"):
-        if not (0 < threshold <= 1):
-            raise ValueError("jaccard/dice threshold must be in (0, 1]")
-        pred = F.col(score_col) >= threshold
-    else:
-        raise ValueError(f"unknown similarity method {method!r}")
-    return scored.filter(pred)
+    return score
 
 
 def matched_pairs(
@@ -86,7 +65,13 @@ def matched_pairs(
     n_bits: int,
     encoded_b: DataFrame | None = None,
 ) -> DataFrame:
-    """Full J3 -> K -> K5 chain: -> (id_a, id_b, sim)."""
-    with_bf = attach_encodings(pairs, encoded_a, encoded_b)
-    scored = score_pairs(with_bf, method, n_bits)
-    return classify(scored, method, threshold).select("id_a", "id_b", "sim")
+    """Full J3 -> K -> K5 chain: (id_a, id_b, ...) x ``(uid, bf)``
+    encodings -> (id_a, id_b, sim)."""
+    sim.check_threshold(method, threshold)
+    encoded_b = encoded_b if encoded_b is not None else encoded_a
+    ea = encoded_a.select(F.col("uid").alias("id_a"), F.col("bf").alias("bf_a"))
+    eb = encoded_b.select(F.col("uid").alias("id_b"), F.col("bf").alias("bf_b"))
+    with_bf = pairs.join(ea, "id_a").join(eb, "id_b").select("id_a", "id_b", "bf_a", "bf_b")
+    schema = StructType([with_bf.schema["id_a"], with_bf.schema["id_b"],
+                         StructField("sim", DoubleType())])
+    return with_bf.mapInArrow(pair_scorer(method, threshold, n_bits), schema)

@@ -101,6 +101,12 @@ def spread_width(df: DataFrame) -> int:
     return max(df.sparkSession.sparkContext.defaultParallelism, 8)
 
 
+def widen(df: DataFrame, width: int) -> DataFrame:
+    """``df`` round-robin repartitioned to ``width`` partitions when it has
+    fewer; an input already that wide is never narrowed."""
+    return df.repartition(width) if df.rdd.getNumPartitions() < width else df
+
+
 def bucket_tiers(
     size_src: DataFrame,
     bucket_cols: list[str],
@@ -226,7 +232,8 @@ def salted_pair_candidates(
     ``keep_bucket_cols=True`` includes the bucket columns in the output
     (useful when the caller's result is keyed by block, e.g. J1).
 
-    ``spread=N``: round-robin repartition ``keyed`` into N partitions first.
+    ``spread=N``: round-robin repartition ``keyed`` into N partitions first
+    when it has fewer (:func:`widen`).
     A small/single-file source arrives as ONE scan partition, and when the
     salted join resolves to broadcast/hash joins with no exchange on the
     streamed side, the whole quadratic pair fan-out runs in a single task
@@ -236,7 +243,7 @@ def salted_pair_candidates(
     is the width the operators pick. Only ``keyed`` is spread.
     """
     if spread is not None:
-        keyed = keyed.repartition(spread)
+        keyed = widen(keyed, spread)
     a, b = salted_sides(
         keyed, keyed if keyed_b is None else keyed_b, bucket_cols, id_col,
         hot_threshold, shards, max_bucket,

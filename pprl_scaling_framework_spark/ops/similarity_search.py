@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .bucket_join import salted_pair_candidates, spread_width, track_persist
+from .bucket_join import salted_pair_candidates, spread_width, track_persist, widen
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -60,11 +60,8 @@ def brute_force_topk(
     # a small/one-file corpus arrives as a single scan partition and the
     # broadcast cross join adds no exchange, so every query x corpus cosine
     # would run serially in one task; spread the corpus first (the shuffle
-    # moved is just the corpus rows, the scoring then parallelizes). Only
-    # widen: never repartition DOWN a corpus that is already spread.
-    spread = spread_width(corpus)
-    if c.rdd.getNumPartitions() < spread:
-        c = c.repartition(spread)
+    # moved is just the corpus rows, the scoring then parallelizes)
+    c = widen(c, spread_width(corpus))
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))

@@ -334,6 +334,21 @@ def test_bucket_join_mega_cap_drops_bucket(spark):
     assert got == {("x", "y")}  # the 10-member mega bucket is dropped entirely
 
 
+def test_salted_pair_spread_only_widens(spark):
+    from pprl_scaling_framework_spark.ops import bucket_join
+
+    rows = [("b", f"m{i}") for i in range(6)]
+    keyed = spark.createDataFrame(rows, "bucket string, id string")
+    assert bucket_join.widen(keyed.coalesce(1), 4).rdd.getNumPartitions() == 4
+    wide = keyed.repartition(12)
+    assert bucket_join.widen(wide, 4).rdd.getNumPartitions() == 12
+    pairs = bucket_join.salted_pair_candidates(wide, ["bucket"], spread=4)
+    plan = pairs._jdf.queryExecution().analyzed().toString()
+    assert "Repartition 12" in plan and "Repartition 4" not in plan
+    assert pairs.count() == 15
+    bucket_join.release_persists()
+
+
 def test_multimodal_video_codec(spark):
     """AVI decode is REAL (pure-Python RIFF/DIB parser): frame sampling must
     return the exact synthesized per-frame pixels, and the undecodable

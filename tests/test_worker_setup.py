@@ -9,12 +9,13 @@ import zipfile
 import zipimport
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from pprl_scaling_framework_spark.blocking.hlsh import hlsh_keys_udf, position_matrix
 from pprl_scaling_framework_spark.encoding.encode import encode_udf
 from pprl_scaling_framework_spark.encoding.schemes import clk
-from pprl_scaling_framework_spark.matching.score import similarity_udf
+from pprl_scaling_framework_spark.matching.score import pair_scorer
 from pprl_scaling_framework_spark.sources import session
 from pprl_scaling_framework_spark.sources.session import worker_task_setup
 
@@ -69,10 +70,15 @@ def test_benchmark_path_udfs_evict_zip_finders(zip_on_path):
     positions = position_matrix(4, 8, n_bits, seed=7)
     contents = pd.Series(["alpha beta", "gamma delta", "alpha beta"])
     bfs = encode_udf(cfg).func(contents)
+    pairs = pa.RecordBatch.from_arrays(
+        [pa.array(["a", "b", "c"]), pa.array(["d", "e", "f"]),
+         pa.array(bfs, pa.binary()), pa.array(bfs, pa.binary())],
+        names=["id_a", "id_b", "bf_a", "bf_b"])
     calls = {
         "encode": lambda: encode_udf(cfg).func(contents),
         "hlsh": lambda: hlsh_keys_udf(positions, n_bits).func(bfs),
-        "similarity": lambda: similarity_udf("dice", n_bits).func(bfs, bfs),
+        "similarity": lambda: pa.Table.from_batches(
+            pair_scorer("dice", 0.5, n_bits)(iter([pairs]))),
     }
     for name, call in calls.items():
         sys.path_importer_cache[zip_on_path] = zipimport.zipimporter(zip_on_path)
